@@ -27,27 +27,8 @@ import org.apache.spark.storage.StorageLevel
   *    encode/decode, fine for the narrow pair lists this serves.
   */
 object Materialize {
-  def once(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint(true)
-    else clusterMaterialize(df)
-
-  /** Lazy variant of [[once]]: marks the frame for one-shot
-    * materialization at its FIRST action instead of running a job now —
-    * for loop bodies whose very next step is itself an action (the
-    * star-contraction round counts the frame immediately), where an
-    * eager call would pay one extra job per iteration. Same
-    * master-awareness: local gets `localCheckpoint(false)`; a cluster
-    * gets a recomputable `persist(MEMORY_AND_DISK)` that populates on
-    * first touch and survives executor loss.
-    *
-    * ITERATIVE callers (a loop whose round N+1 is built on round N's
-    * frame) should use [[lazilyReleasable]]/[[onceReleasable]] instead:
-    * on a cluster, each round's persisted RDD is held live by the next
-    * round's lineage, so without an explicit release storage grows
-    * O(rounds × frame) — evictable under pressure but never freed. */
-  def lazily(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint(false)
-    else clusterLazily(df)
+  /** Eager materialization of a call-local frame (no release handle). */
+  def once(df: DataFrame): DataFrame = onceReleasable(df).df
 
   /** A materialized frame plus an explicit storage release — the
     * iterative-loop contract. `release()` drops the round's cached
@@ -63,63 +44,53 @@ object Materialize {
     def release(): Unit = backing.foreach(_.unpersist(blocking = false))
   }
 
-  /** [[lazily]] with a [[Handle]] for iterative loops: release round
-    * N's storage once round N+1 is populated and compared, so a deep
-    * contraction keeps O(1) rounds cached instead of O(rounds).
+  /** Lazy materialization with a [[Handle]] for iterative loops: marks
+    * the frame for one-shot materialization at its FIRST action instead
+    * of running a job now — for loop bodies whose very next step is
+    * itself an action (the star-contraction round counts the frame
+    * immediately), where an eager call would pay one extra job per
+    * iteration. Release round N's storage once round N+1 is populated
+    * and compared: on a cluster each round's persisted RDD is held live
+    * by the next round's lineage, so a deep contraction keeps O(1)
+    * rounds cached instead of O(rounds).
     *
     * `truncateLineage`: on a cluster whose deployment armed
     * `sparkContext.setCheckpointDir`, ALSO reliable-checkpoint this
-    * round's RDD (lazy — rides the caller's materializing action, then
-    * one copy job from the cached blocks), resetting both lineage depth
-    * and the recovery-replay chain. Ask for it every N rounds from deep
-    * loops, not every round — it writes the full frame to the
-    * checkpoint dir. Silently a plain persist when no checkpoint dir is
-    * set: release() already bounds storage, and demanding a dir would
-    * break every deployment without one; only the replay chain stays
-    * O(rounds since last truncation). */
+    * round's RDD (lazy — rides the materializing action, then one copy
+    * job from the cached blocks), resetting both lineage depth and the
+    * recovery-replay chain. Ask for it every N rounds from deep loops,
+    * not every round — it writes the full frame to the checkpoint dir.
+    * Silently a plain persist when no checkpoint dir is set: release()
+    * already bounds storage, and demanding a dir would break every
+    * deployment without one; only the replay chain stays O(rounds since
+    * last truncation). */
   def lazilyReleasable(df: DataFrame, truncateLineage: Boolean = false): Handle =
-    if (df.sparkSession.sparkContext.isLocal)
-      new Handle(df.localCheckpoint(false), None)
-    else clusterLazilyReleasable(df, truncateLineage)
+    materialize(df, eager = false, truncateLineage)
 
   /** Eager twin of [[lazilyReleasable]] — for loop bodies whose next
     * step is NOT a full action over the frame (an `isEmpty` probe can
     * stop at the first non-empty partition, which must not be what
     * populates the round). */
   def onceReleasable(df: DataFrame, truncateLineage: Boolean = false): Handle =
-    if (df.sparkSession.sparkContext.isLocal)
-      new Handle(df.localCheckpoint(true), None)
-    else {
-      val h = clusterLazilyReleasable(df, truncateLineage)
-      h.df.count()
-      h
-    }
+    materialize(df, eager = true, truncateLineage)
 
-  /** The cluster branch of [[lazily]] — exposed for its spec (tests
-    * run on a local master, same as [[clusterMaterialize]]). */
-  private[graft] def clusterLazily(df: DataFrame): DataFrame = {
-    val rows = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    df.sparkSession.createDataFrame(rows, df.schema)
-  }
+  private def materialize(df: DataFrame, eager: Boolean, truncateLineage: Boolean): Handle =
+    if (df.sparkSession.sparkContext.isLocal) new Handle(df.localCheckpoint(eager), None)
+    else cluster(df, eager, truncateLineage)
 
-  /** The cluster branch of [[lazilyReleasable]], exposed for its spec. */
-  private[graft] def clusterLazilyReleasable(
-      df: DataFrame, truncateLineage: Boolean): Handle = {
-    val sc = df.sparkSession.sparkContext
+  /** The cluster branch of every entry point, callable directly by its
+    * spec (tests run on a local master, where the entry points take the
+    * localCheckpoint fast path). `eager` populates the blocks now;
+    * otherwise the frame's first action does. */
+  private[graft] def cluster(df: DataFrame, eager: Boolean,
+                             truncateLineage: Boolean = false): Handle = {
     val rows = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     // checkpoint() must be called before any job touches the RDD; the
-    // write itself happens after the caller's first action, served from
-    // the blocks that action just populated
-    if (truncateLineage && sc.getCheckpointDir.isDefined) rows.checkpoint()
+    // write itself happens after the first action, served from the
+    // blocks that action just populated
+    if (truncateLineage && df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      rows.checkpoint()
+    if (eager) rows.count()
     new Handle(df.sparkSession.createDataFrame(rows, df.schema), Some(rows))
-  }
-
-  /** The cluster branch of [[once]], callable directly by its spec
-    * (tests run on a local master, where [[once]] would take the
-    * localCheckpoint fast path). */
-  private[graft] def clusterMaterialize(df: DataFrame): DataFrame = {
-    val rows = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    rows.count()
-    df.sparkSession.createDataFrame(rows, df.schema)
   }
 }

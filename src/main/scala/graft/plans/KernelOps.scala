@@ -716,7 +716,9 @@ object KernelOps {
     * bytes from the start of token i to the end of token i+k-1 — the
     * shingles are zero-copy slices of one shared byte copy. A doc
     * shorter than k tokens contributes its whole text as one shingle
-    * (graft.functions.Hashing.shingles semantics). */
+    * (graft.functions.Hashing.shingles semantics). Exact on valid UTF-8
+    * only, TokenExprs.scala's exactness domain: the declarative split
+    * decodes invalid bytes to U+FFFD, these slices keep the raw bytes. */
   def wordShingles(text: UTF8String, k: Int): ArrayData = {
     val b = text.getBytes
     var spaces = 0
@@ -897,7 +899,10 @@ object KernelOps {
     * length(w))` — the summed token lengths of qualityScore's mean-
     * length term. Tokens partition the text's code points minus the
     * splitting spaces, so the sum is numChars − spaces: two counters,
-    * no token materialization, no interpreted fold. */
+    * no token materialization, no interpreted fold. Exact on valid UTF-8
+    * only, TokenExprs.scala's exactness domain: on invalid bytes a
+    * truncated lead's stride can skip a space byte, and the twin's
+    * token lengths no longer sum to numChars − spaces. */
   def sumTokenChars(text: UTF8String): Long = {
     val b = text.getBytes
     var spaces = 0

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
-import graft.model.Tables
+import graft.model.{Stages, Tables}
 import graft.operators.SimilaritySearch
 
 /** Similarity-search operators over the embeddings corpus. The LSH
@@ -61,19 +61,18 @@ object AnnQueries {
   /** Corpus-sized LSH geometry for n8_scaled — the same
     * `scaledLshBits` rule d10_scaled declares, here over n8's banded
     * universe (store ∪ batch). One exact count per corpus per session,
-    * memoized as an Int (nothing to unpersist). The pinned bits=6
+    * shared as an Int stage (nothing to unpersist). The pinned bits=6
     * geometry has NO bucket cap (candidates are batch-vs-all, bounded
     * by occupancy alone), so holding occupancy ~16 as N grows is the
     * entire scale story: at x100 the pin measured 1698 s with 360 GB
     * of spill (SCALE.md round-10 proof) — the worst cell of the sweep.
     */
-  private val scaledIncBitsMemo = scala.collection.concurrent.TrieMap[String, Int]()
   private def scaledIncBits(s: SparkSession, d: String): Int =
-    scaledIncBitsMemo.getOrElseUpdate(s.hashCode + "|" + d, {
+    Stages.shared(s, "scaled_inc_bits", d) {
       val emb = t(s, d, "embeddings")
       val n = emb.count() + emb.filter(col("vec_id") % 7 === 0).count()
       SimilaritySearch.scaledLshBits(n)
-    })
+    }
 
   private def queriesDf(s: SparkSession, d: String) =
     t(s, d, "embeddings").filter(col("vec_id") < 8)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Hashing, Vectors}
-import graft.model.Tables
+import graft.model.{Stages, Tables}
 import graft.operators.Dedup
 
 /** Dedup operator family bound to the documents/embeddings corpus.
@@ -32,42 +32,38 @@ object DedupQueries {
       concat(col("text"), lit(" zz qq ww")).as("text")))
   }
 
-  /** Shared per-(session, sfDir) memoized intermediates: ONE signature
-    * pass over the mutations corpus feeds the d2 pair list, c2's
-    * clustering, and c3's incremental batch pairing; the c2 labeling is
-    * likewise computed once and reused as c3's starting state. */
-  private val sigsMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
+  /** Shared per-(session, sfDir) stages ([[graft.model.Stages]]): ONE
+    * signature pass over the mutations corpus feeds the d2 pair list,
+    * c2's clustering, and c3's incremental batch pairing; the c2
+    * labeling is likewise computed once and reused as c3's starting
+    * state. */
   private def mutationSigsDf(s: SparkSession, d: String): DataFrame =
-    sigsMemo.getOrElseUpdate(s.hashCode + "|" + d,
-      Dedup.minhashSignatures(docsWithMutations(s, d), "doc_id", "text", K, H, B)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Stages.persisted(s, "mutation_sigs", d)(
+      Dedup.minhashSignatures(docsWithMutations(s, d), "doc_id", "text", K, H, B))
 
   /** Signatures of the PLAIN documents corpus (no mutations) — the
     * persisted "yesterday's store" side shared by d2's signature dump
     * and the incremental queries d7/d8; each of those reads it from two
     * plan subtrees, so an unpersisted frame would re-run the md5
     * minhash chain per subtree. */
-  private val docSigsMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def docSigsDf(s: SparkSession, d: String): DataFrame =
-    docSigsMemo.getOrElseUpdate(s.hashCode + "|" + d,
+    Stages.persisted(s, "doc_sigs", d)(
       Dedup.minhashSignatures(
-          t(s, d, "documents").select(col("doc_id"), col("text")),
-          "doc_id", "text", K, H, B)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        t(s, d, "documents").select(col("doc_id"), col("text")),
+        "doc_id", "text", K, H, B))
 
   /** Materialize a production-persisted store as a BUCKETED table
     * (write-once via [[graft.sources.Layout.writeBucketed]], then read
-    * back) — unlike the in-memory memos, these model artifacts a real
+    * back) — unlike the in-memory stages, these model artifacts a real
     * deployment builds ONCE and keeps on disk ("yesterday's store"):
     * every subsequent batch probes the clustered parquet, and because
     * the table is bucketed on the probe key the store side of the join
     * never shuffles. Keyed by sf-dir so a fresh JVM rebuilds (never a
     * stale read across code changes); table lives in the session's
-    * warehouse dir. */
-  private val storeMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
+    * warehouse dir, so the registry keeps it unpersisted. */
   private def bucketedStore(s: SparkSession, d: String, name: String,
                             key: String)(build: => DataFrame): DataFrame =
-    storeMemo.getOrElseUpdate(s.hashCode + "|" + d + "|" + name, {
+    Stages.shared(s, name, d) {
       val tbl = s"graft_${name}_${(d.hashCode & 0x7fffffff).toHexString}"
       // a previous JVM may have left the managed location behind (its
       // in-memory catalog died with it, but the warehouse dir is on
@@ -80,7 +76,7 @@ object DedupQueries {
       if (fs.exists(loc)) fs.delete(loc, true)
       graft.sources.Layout.writeBucketed(build, tbl, 16, key)
       s.table(tbl)
-    })
+    }
 
   /** Labeling of the PLAIN documents corpus (self-pairs of the raw
     * 500-doc table — typically sparse), the existing-cluster state u5's
@@ -115,35 +111,19 @@ object DedupQueries {
     plainLabelsDf(s, d).count()
   }
 
-  /** Drop every in-memory memo this module holds: unpersist the cached
-    * frames and clear the maps so the blocks (and, after a GC, their
-    * localCheckpoint ancestors) leave executor storage. A session that
-    * measures SEVERAL corpora back-to-back (ScaleRun) must call this
-    * between corpora — the memos are keyed per (session, dir), so the
-    * previous corpus's signature/pair/label caches otherwise stay
-    * resident and the new corpus's jobs pay their eviction + GC churn
-    * (measured: d11 at x10 reads 141 s in a polluted JVM vs 8–14 s in
-    * a clean one — SCALE.md round-9 notes). The disk-bucketed stores
-    * ([[bucketedStore]]) are dropped from the map only; their bytes
-    * live in the warehouse dir, not executor memory. */
-  def releaseMemos(): Unit = {
-    Seq(sigsMemo, docSigsMemo, pairsMemo, labelsMemo, embPairsMemo)
-      .foreach { m => m.values.foreach(_.unpersist(false)); m.clear() }
-    storeMemo.clear()
-  }
+  /** Delegates to [[graft.model.Stages.release]], which drops every
+    * shared stage of every query family. Kept under this name because
+    * the benchmark harness (`perfbench/`) calls it between operations. */
+  def releaseMemos(): Unit = Stages.release()
 
-  private val pairsMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def minhashPairsDf(s: SparkSession, d: String): DataFrame =
-    pairsMemo.getOrElseUpdate(s.hashCode + "|" + d,
-      Dedup.pairsFromSigs(mutationSigsDf(s, d), "doc_id", B, 50)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Stages.persisted(s, "minhash_pairs", d)(
+      Dedup.pairsFromSigs(mutationSigsDf(s, d), "doc_id", B, 50))
 
-  private val labelsMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def dupClustersDf(s: SparkSession, d: String): DataFrame =
-    labelsMemo.getOrElseUpdate(s.hashCode + "|" + d,
+    Stages.persisted(s, "dup_clusters", d)(
       graft.operators.Components.connectedComponentsStar(
-          minhashPairsDf(s, d), "id_a", "id_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        minhashPairsDf(s, d), "id_a", "id_b"))
 
   /** The embedding near-dup universe — originals plus a +0.05-on-dim-1
     * mutated copy of every vector (id + 100000) — shared by d5/c5
@@ -170,21 +150,19 @@ object DedupQueries {
     orig.unionByName(mut)
   }
 
-  /** d5's thresholded embedding near-dup pairs, shared by the pair dump
-    * (d5) and the cluster formation (c5) — the same one-modality-in,
-    * many-consumers memo shape as the minhash pair table. */
-  /** Corpus-sized LSH geometry for d10_scaled, memoized per sfDir —
-    * one exact count of the embedding universe per corpus per session.
-    * An Int memo, not a DataFrame: nothing to unpersist in
-    * releaseMemos, and the count re-runs per fresh corpus by design. */
-  private val scaledBitsMemo = scala.collection.concurrent.TrieMap[String, Int]()
+  /** Corpus-sized LSH geometry for d10_scaled, shared per sfDir — one
+    * exact count of the embedding universe per corpus per session. An
+    * Int stage, not a DataFrame: nothing to unpersist, and the count
+    * re-runs per fresh corpus by design. */
   private def scaledBits(s: SparkSession, d: String): Int =
-    scaledBitsMemo.getOrElseUpdate(s.hashCode + "|" + d,
+    Stages.shared(s, "scaled_bits", d)(
       graft.operators.SimilaritySearch.scaledLshBits(embeddingUniverse(s, d).count()))
 
-  private val embPairsMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
+  /** d5's thresholded embedding near-dup pairs, shared by the pair dump
+    * (d5) and the cluster formation (c5) — the same one-modality-in,
+    * many-consumers stage shape as the minhash pair table. */
   private def embeddingPairsDf(s: SparkSession, d: String): DataFrame =
-    embPairsMemo.getOrElseUpdate(s.hashCode + "|" + d,
+    Stages.persisted(s, "embedding_pairs", d)(
       // bits=8 / cap=256 is the oracle-pinned geometry: measured max
       // bucket occupancy at sf0.1 is 149, so the cap never binds here
       // and the result equals the uncapped join (SCALE.md round-9
@@ -193,8 +171,7 @@ object DedupQueries {
       // restores linearity)
       graft.operators.SimilaritySearch.lshNearDupPairs(
           embeddingUniverse(s, d), "vec_id", "vec",
-          minCosine = 0.9, bits = 8, tables = 4, maxBucket = 256)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          minCosine = 0.9, bits = 8, tables = 4, maxBucket = 256))
 
   val queries: Map[String, Q] = Map(
     // D-1: exact dedup by content hash, keep-lowest-id
@@ -315,8 +292,8 @@ object DedupQueries {
         .filter(col("doc_id") % 9 === 0)
         .select((col("doc_id") + 200000).as("doc_id"),
           concat(col("text"), lit(" rr ss")).as("text"))
-      // the existing-corpus signatures and labeling are the SHARED
-      // memoized tables — the batch pays only its own hashing, banding
+      // the existing-corpus signatures and labeling are SHARED
+      // stages — the batch pays only its own hashing, banding
       // against the store, and the O(batch) contracted merge
       val batchPairs = Dedup.incrementalMinhashPairs(incoming, mutationSigsDf(s, d),
         "doc_id", "text", K, H, B, 50, uniqueIds = true)
@@ -367,8 +344,8 @@ object DedupQueries {
 
     // U-4: the full LLM-curation pipeline with NEAR-dup dedup — the
     // capstone composition: corpus → minhash-LSH pairs → star-CC
-    // clusters → canonical selection (all via the shared memoized
-    // tables) → quality gate → deterministic split → per-(split,class)
+    // clusters → canonical selection (all via the shared stages)
+    // → quality gate → deterministic split → per-(split,class)
     // stats. u3's exact-hash dedup can't collapse tail-mutated copies;
     // this removes a whole near-dup CLUSTER down to its minimum.
     "u4_neardup_curation" -> ((s, d) => {
@@ -642,7 +619,7 @@ object DedupQueries {
         if (sys.props.get("graft.u5.checkpoint").contains("true"))
           graft.operators.Materialize.once(survivorsPlan)
         else survivorsPlan
-      // uniqueIds: the store side is the memoized write-once signature
+      // uniqueIds: the store side is the shared write-once signature
       // frame (one row per doc by construction) — the mid-compaction
       // duplicate shield is for unmanaged directory piles
       val batchPairs = Dedup.incrementalMinhashPairs(
@@ -664,7 +641,7 @@ object DedupQueries {
     // NEAR-DUP CLUSTER representative (min member id; unclustered docs
     // key on themselves), so mutated copies of one document can never
     // straddle the train/test boundary and leak evaluation data into
-    // training. Reuses the memoized c2 labeling; the assignment itself
+    // training. Reuses the shared c2 labeling; the assignment itself
     // is p1's md5 bucket arithmetic — one broadcast-or-shuffle join
     // against the slim label table, then a narrow map. CurationSpec
     // asserts every cluster lands in exactly one split.

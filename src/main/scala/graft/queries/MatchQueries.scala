@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Names, Similarity}
-import graft.model.Tables
+import graft.model.{Stages, Tables}
 import graft.operators.MatchJoin
 
 /** J-1/J-2/J-3/A-7 bound to testdata: the right side is a deterministic
@@ -38,22 +38,14 @@ object MatchQueries {
       t(s, d, "customer").filter(col("c_custkey") % 7 === 0)
         .select(col("c_custkey").as("cand_key"), expr(candSql).as("cand_name")))
 
-  /** Unpersist and forget the match-table memo (see
-    * [[DedupQueries.releaseMemos]] for when and why). */
-  def releaseMemos(): Unit = {
-    matchMemo.values.foreach(_.unpersist(false)); matchMemo.clear()
-  }
-
   /** j1's match table feeds two declared queries (the join itself and
-    * the A-7 rate counters); memoized + persisted per sfDir so the
+    * the A-7 rate counters); a persisted per-sfDir stage so the
     * 10000×|candidates| scoring pass runs once per session. */
-  private val matchMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def matchesDf(s: SparkSession, d: String): DataFrame =
-    matchMemo.getOrElseUpdate(s.hashCode + "|" + d,
+    Stages.persisted(s, "matches", d)(
       MatchJoin.broadcastJoin(
         leftDf(s, d), "c_custkey", "c_name",
-        rightDf(s, d), "cand_key", "cand_name", cutoff)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        rightDf(s, d), "cand_key", "cand_name", cutoff))
 
   val queries: Map[String, Q] = Map(
     // J-1 flagship: exact (broadcast) multi-strategy fuzzy join

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Names, Similarity}
-import graft.model.Tables
+import graft.model.{Stages, Tables}
 import graft.pipeline.Pipeline
 
 /** U-1/U-2: the full t1'→t3'→t4' pipeline composed end-to-end on
@@ -55,18 +55,10 @@ object PipelineQueries {
     Tables.spread(Tables.load(s, d, "customer").filter(col("c_custkey") % 7 === 0)
       .selectExpr(ccCols: _*))
 
-  /** Unpersist and forget the unified-table memo (see
-    * [[DedupQueries.releaseMemos]] for when and why). */
-  def releaseMemos(): Unit = {
-    memo.values.foreach(_.unpersist(false)); memo.clear()
-  }
-
-  /** Unified table memoized per sfDir — it feeds both U-1 and U-2. */
-  private val memo = scala.collection.concurrent.TrieMap[String, DataFrame]()
+  /** Unified table shared per sfDir — it feeds both U-1 and U-2. */
   private def unified(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate(s.hashCode + "|" + d,
-      Pipeline.buildUnified(abrDf(s, d), ccDf(s, d), "cc_id", cutoff)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Stages.persisted(s, "unified", d)(
+      Pipeline.buildUnified(abrDf(s, d), ccDf(s, d), "cc_id", cutoff))
 
   /** Stop-token frequency for the blocked pipeline variant —
     * blockedJoin's default 1000, the deployment configuration SCALE.md
@@ -91,10 +83,9 @@ object PipelineQueries {
     // documented shared-rare-keyword condition (PipelineSpec pins the
     // subset/confidence-dominance invariants against u1).
     "u1_blocked_pipeline" -> ((s, d) =>
-      memo.getOrElseUpdate("blocked|" + s.hashCode + "|" + d,
+      Stages.persisted(s, "unified_blocked", d)(
         Pipeline.buildUnified(abrDf(s, d), ccDf(s, d), "cc_id", cutoff,
-            blockTokenFreq = Some(blockFreq))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          blockTokenFreq = Some(blockFreq)))
         .orderBy(col("abn"))),
     "u2_quality_report" -> ((s, d) => Pipeline.qualityReport(unified(s, d)))
   )

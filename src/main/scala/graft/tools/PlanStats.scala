@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.graft.MetricsBridge.drain
+import scala.jdk.CollectionConverters._
 
 /** One-line plan-shape census per declared query: Exchange count, join
   * strategies, window count — the audit table an optimization round
@@ -32,9 +34,11 @@ object PlanStats {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // side executions (Materialize.once memo/store builds) carry real
-    // plan shapes too — count their interpreted lambdas alongside the
-    // main plan's (the same reasoning as PlanFormat's side capture)
+    // side executions (Materialize.once and shared-stage builds) carry
+    // real plan shapes too — count their interpreted lambdas alongside
+    // the main plan's (the same reasoning as PlanFormat's side capture).
+    // Listener delivery is async, so the bus is drained before the
+    // buffer is read or cleared.
     val sides = new java.util.concurrent.CopyOnWriteArrayList[String]()
     spark.listenerManager.register(
       new org.apache.spark.sql.util.QueryExecutionListener {
@@ -53,16 +57,18 @@ object PlanStats {
     println(f"${"query"}%-34s exch reuse smj shj bhj bnlj win sortN hof")
     for (name <- names) {
       try {
+        drain(spark.sparkContext) // the previous query's count() lands first
         sides.clear()
         val df = graft.SparkEntry.queries(name)(spark, d)
+        drain(spark.sparkContext)
+        // summed before count(): that execution's plan is the main plan again
+        val sideHof = sides.asScala.map(lambdas).sum
         df.count()
         val nodes = walk(df.queryExecution.executedPlan).map(_.nodeName)
         def c(sub: String) = nodes.count(_.contains(sub))
         val exch = walk(df.queryExecution.executedPlan)
           .count { case _: ShuffleExchangeLike => true; case _ => false }
-        import scala.jdk.CollectionConverters._
-        val hof = lambdas(df.queryExecution.executedPlan.toString) +
-          sides.asScala.map(lambdas).sum
+        val hof = lambdas(df.queryExecution.executedPlan.toString) + sideHof
         println(f"$name%-34s $exch%4d ${c("ReusedExchange")}%5d ${c("SortMergeJoin")}%3d " +
           f"${c("ShuffledHashJoin")}%3d ${c("BroadcastHashJoin")}%3d ${c("BroadcastNestedLoopJoin")}%4d " +
           f"${c("Window")}%3d ${c("Sort")}%5d $hof%3d")

@@ -92,17 +92,16 @@ object ScaleRun {
     val scaleJsons = pairs.map { case (label, dir) =>
       System.err.println(s"[scale] === $label ($dir) ===")
       // Start each corpus from clean executor storage: the previous
-      // label's memoized signature/pair/label caches and the operators'
-      // call-local localCheckpoint blocks are dead weight for this
-      // label's jobs (different dir → different plans), but they stay
-      // resident until unpersisted/GC'd and their eviction + GC churn
-      // lands in THIS label's measurements (d11 at x10 measured 141 s
-      // in a polluted JVM vs 8–14 s clean). Release the memos, drop
-      // any remaining cache entries, and give ContextCleaner a GC so
-      // dereferenced checkpoint RDDs actually free their blocks.
-      graft.queries.DedupQueries.releaseMemos()
-      graft.queries.MatchQueries.releaseMemos()
-      graft.queries.PipelineQueries.releaseMemos()
+      // label's shared stages (signature/pair/label, match and unified
+      // frames) and the operators' call-local localCheckpoint blocks
+      // are dead weight for this label's jobs (different dir →
+      // different plans), but they stay resident until unpersisted/
+      // GC'd and their eviction + GC churn lands in THIS label's
+      // measurements (d11 at x10 measured 141 s in a polluted JVM vs
+      // 8–14 s clean). Release the stage registry, drop any remaining
+      // cache entries, and give ContextCleaner a GC so dereferenced
+      // checkpoint RDDs actually free their blocks.
+      graft.model.Stages.release()
       spark.sharedState.cacheManager.clearCache()
       System.gc()
       Thread.sleep(2000) // let ContextCleaner's async unpersists drain

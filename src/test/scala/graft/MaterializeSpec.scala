@@ -4,10 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Materialize
 
-/** The cluster branch of [[graft.operators.Materialize.once]] — tests
-  * run on a local master where `once` takes the localCheckpoint fast
-  * path, so the spec drives [[Materialize.clusterMaterialize]]
-  * directly. The property under test is the review finding it fixed:
+/** The cluster branch of [[graft.operators.Materialize]] — tests run
+  * on a local master where every entry point takes the localCheckpoint
+  * fast path, so the spec drives [[Materialize.cluster]] directly. The property under test is the review finding it fixed:
   * materialization must NOT register the plan in the SQL CacheManager
   * (whose strong reference outlives any lazy-consumer call site — a
   * perpetual-ingest driver would pin one cached frame per micro-batch,
@@ -16,16 +15,16 @@ import graft.operators.Materialize
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
 
-  test("clusterMaterialize preserves rows/schema and registers no SQL cache entry") {
+  test("eager cluster branch preserves rows/schema and registers no SQL cache entry") {
     val df = spark.range(100)
       .select($"id", (col("id") % 7).as("k"), concat(lit("v"), $"id").as("s"))
     val before = spark.sharedState.cacheManager.isEmpty
-    val out = Materialize.clusterMaterialize(df)
+    val out = Materialize.cluster(df, eager = true).df
     assert(out.schema == df.schema)
     assert(out.collect().sortBy(_.getLong(0)).toSeq ==
       df.collect().sortBy(_.getLong(0)).toSeq)
     assert(spark.sharedState.cacheManager.isEmpty == before,
-      "clusterMaterialize must not create a CacheManager entry — that " +
+      "the cluster branch must not create a CacheManager entry — that " +
         "reference can only be dropped by an explicit unpersist() no " +
         "lazy-consumer call site can issue")
     // the backing RDD IS persisted (that is the materialization), and
@@ -33,9 +32,9 @@ class MaterializeSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
   }
 
-  test("clusterLazily defers the job and populates once: probe fires at first action only") {
+  test("lazy cluster branch defers the job and populates once: probe fires at first action only") {
     // an accumulator-probed row stream proves all three contract
-    // points: (a) NO job runs at call time (lazily exists exactly so
+    // points: (a) NO job runs at call time (the lazy form exists so
     // loop bodies whose next step is an action don't pay one extra job
     // per round); (b) the first action populates through the probe;
     // (c) the second action reads persisted blocks, not the lineage
@@ -43,8 +42,8 @@ class MaterializeSpec extends SparkSpec {
     val base = spark.range(50).select($"id", (col("id") * 2).as("v"))
     val probed = spark.createDataFrame(
       base.rdd.map { r => acc.add(1); r }, base.schema)
-    val out = Materialize.clusterLazily(probed)
-    assert(acc.value == 0, "clusterLazily ran a job at call time")
+    val out = Materialize.cluster(probed, eager = false).df
+    assert(acc.value == 0, "the lazy cluster branch ran a job at call time")
     assert(out.schema == base.schema)
     assert(out.count() == 50)
     assert(acc.value >= 50, "first action did not populate through the probe")
@@ -63,7 +62,7 @@ class MaterializeSpec extends SparkSpec {
     // persistent-RDD registry and (b) NOT invalidate the frame — the
     // data stays recomputable through lineage.
     val df = spark.range(80).select($"id", (col("id") % 3).as("g"))
-    val h = Materialize.clusterLazilyReleasable(df, truncateLineage = false)
+    val h = Materialize.cluster(df, eager = false, truncateLineage = false)
     assert(h.df.count() == 80)
     val persistedId = h.backing.get.id
     assert(spark.sparkContext.getPersistentRDDs.contains(persistedId),
@@ -85,8 +84,8 @@ class MaterializeSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-matckpt")
     try {
       spark.sparkContext.setCheckpointDir(ckpt.toString)
-      val h2 = Materialize.clusterLazilyReleasable(
-        spark.range(40).toDF("id"), truncateLineage = true)
+      val h2 = Materialize.cluster(
+        spark.range(40).toDF("id"), eager = false, truncateLineage = true)
       assert(h2.df.count() == 40)
       assert(h2.backing.get.isCheckpointed,
         "truncateLineage with an armed checkpoint dir must reliably checkpoint")
