@@ -3,6 +3,8 @@ package graft.api
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.plans.TokenExprs
+
 /** S-10/F-9..F-11: the reference's FastAPI read surface
   * (fastapi_service/main.py:15-59) as DataFrame query builders over the
   * unified table — the route-shadowing defect (SURVEY.md §2.K) is
@@ -25,9 +27,12 @@ object QueryApi {
     // driver-side vs 'iii' in the engine — the search silently returns
     // nothing for data that is present)
     val ql = q.toLowerCase(java.util.Locale.ROOT)
+    // TokenExprs.lower == Spark's lower(), minus its per-JVM ICU table
+    // initialization — which a fresh server would otherwise pay inside
+    // its first search request
     unified.filter(
-      lower(col("entity_name")).contains(ql) ||
-        lower(col("company_name")).contains(ql))
+      TokenExprs.lower(col("entity_name")).contains(ql) ||
+        TokenExprs.lower(col("company_name")).contains(ql))
   }
 
   /** GET /companies/by_state/{state} — equality filter (F-11). */

@@ -81,9 +81,12 @@ object Similarity {
     * {intersection, intersection+restA, intersection+restB} joins.
     * Kernel expression (the per-pair set-op merge + banded levenshtein
     * of [[graft.plans.FuzzyBestScore]] at floor 0); ASCII-domain
-    * contract as [[sql.ratio]] — call sites feed normalizeName output. */
+    * contract as [[sql.ratio]] — call sites feed normalizeName output.
+    * A null set scores 100, as in the declarative twin (whose set-op
+    * strings all null out, leaving `greatest(null, null, ratio("",""))`);
+    * the kernel itself propagates null. */
   def tokenSetRatioFromSets(ta: Column, tb: Column): Column =
-    graft.plans.TokenExprs.tokenSetRatio100(ta, tb)
+    coalesce(graft.plans.TokenExprs.tokenSetRatio100(ta, tb), lit(100))
 
   /** [[tokenSetRatioFromSets]]'s declarative twin (parity tests only). */
   def tokenSetRatioFromSetsDeclarative(ta: Column, tb: Column): Column = {

@@ -632,6 +632,17 @@ object KernelOps {
     n
   }
 
+  /** [[LowerCase]]: exactly what Spark's `lower()` computes under ICU
+    * case mappings (the default; `CollationSupport.Lower.execBinaryICU`)
+    * — an ASCII fast path, else ICU's root-locale full lowercase of the
+    * valid-UTF-8 decoding (invalid bytes become U+FFFD). Calling ICU
+    * directly skips `CollationAwareUTF8String`, whose static initializer
+    * title-cases all 1,114,112 code points: over a second of CPU in the
+    * first task of each JVM that lowercases anything. */
+  def lower(u: UTF8String): UTF8String =
+    if (u.isFullAscii) u.toLowerCaseAscii
+    else UTF8String.fromString(com.ibm.icu.lang.UCharacter.toLowerCase(u.toValidString))
+
   /** [[TokenSortJoinExpr]]: `array_join(array_sort(split(s," ")), " ")`
     * in one pass. Sorting is UTF8String binary order — exactly
     * array_sort's string order — and rejoining single-space-split

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ExprBridge
@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - [[CharNgramSet]]      == Hashing.charNgramsDeclarative (substr →
   *    transform-gram → distinct → sort, with the short-string edge)
   *  - [[TokenSetRatio100]]  == Similarity.tokenSetRatioFromSetsDeclarative
-  *    (greatest of the three set-op component ratios)
+  *    (greatest of the three set-op component ratios) on non-null sets
   *
   * Exactness domains: splitting on the 0x20 byte equals regex-splitting
   * on " " for all valid UTF-8 (a space byte never occurs inside a
@@ -46,6 +46,20 @@ case class TokenSortJoinExpr(child: Expression) extends UnaryExpression {
     KernelOps.tokenSortJoin(v.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.plans.KernelOps.tokenSortJoin($c)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `lower()` without Spark's ICU table initialization (see
+  * [[KernelOps.lower]]); value-identical to Spark's `lower()` under its
+  * default ICU case mappings, property-checked in AdversarialTextSpec. */
+case class LowerCase(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    TypeChecks.expect("graft_lower", Seq(TypeChecks.string("text", child.dataType)))
+  override def dataType: DataType = StringType
+  override protected def nullSafeEval(v: Any): Any =
+    KernelOps.lower(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.KernelOps.lower($c)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -80,41 +94,20 @@ case class CharNgramSet(child: Expression, n: Int, maxLen: Int) extends UnaryExp
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** token_set_ratio over precomputed sorted distinct token arrays.
-  *
-  * Null edge pinned to the declarative chain: with EITHER side null,
-  * every set-op string nulls out, `concat_ws` skips the nulls leaving
-  * t1 = t2 = "", the two inter-ratios are null, and
-  * `greatest(null, null, ratio("","")) = 100` — so null input scores
-  * 100, never null (unreachable from the call sites, whose inputs are
-  * tokenSet over null-coalescing normalizeName, but the twin parity is
-  * exact everywhere). */
+/** token_set_ratio over precomputed sorted distinct token arrays; null
+  * if either set is null. (The declarative twin scores a null side 100
+  * — `greatest(null, null, ratio("",""))` — and that legacy edge lives
+  * only at its one boundary, `Similarity.tokenSetRatioFromSets`.) */
 case class TokenSetRatio100(left: Expression, right: Expression) extends BinaryExpression {
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     TypeChecks.expect("graft_token_set_ratio",
       Seq(TypeChecks.stringArray("left_set", left.dataType),
         TypeChecks.stringArray("right_set", right.dataType)))
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any = {
-    val l = left.eval(input)
-    val r = right.eval(input)
-    if (l == null || r == null) 100
-    else KernelOps.tokenSetRatio100(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    val resultCode = code"""
-      |${l.code}
-      |${r.code}
-      |int ${ev.value} = 100;
-      |if (!(${l.isNull}) && !(${r.isNull})) {
-      |  ${ev.value} = graft.plans.KernelOps.tokenSetRatio100(${l.value}, ${r.value});
-      |}
-    """.stripMargin
-    ev.copy(code = resultCode, isNull = FalseLiteral)
-  }
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    KernelOps.tokenSetRatio100(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (l, r) => s"graft.plans.KernelOps.tokenSetRatio100($l, $r)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -251,6 +244,8 @@ case class PolyFingerprint(child: Expression, maxLen: Int) extends UnaryExpressi
 }
 
 object TokenExprs {
+  def lower(c: Column): Column =
+    ExprBridge.toColumn(LowerCase(ExprBridge.toExpression(c)))
   def tokenSortJoin(c: Column): Column =
     ExprBridge.toColumn(TokenSortJoinExpr(ExprBridge.toExpression(c)))
   def tokenSet(c: Column): Column =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.Tables
+import graft.plans.TokenExprs
 
 /** Core relational operator queries (SURVEY.md §2.A/B/D/F), each paired
   * with an ANSI-SQL oracle in [[CoreQueries.oracles]] for the DuckDB
@@ -105,7 +106,8 @@ object CoreQueries {
     // F-10: case-insensitive substring search (reference fastapi_service/main.py:44-45)
     "f10_search_ilike" -> ((s, d) =>
       t(s, d, "part")
-        .filter(lower(col("p_name")).contains("bolt") || lower(col("p_type")).contains("promo"))
+        .filter(TokenExprs.lower(col("p_name")).contains("bolt") ||
+          TokenExprs.lower(col("p_type")).contains("promo"))
         .select(col("p_partkey"), col("p_name"), col("p_type"))
         .orderBy(col("p_partkey"))),
 

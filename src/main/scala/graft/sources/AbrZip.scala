@@ -1,147 +1,100 @@
 package graft.sources
 
-import java.io.ByteArrayInputStream
-import java.util.zip.ZipInputStream
+import java.io.InputStream
+import java.nio.ByteBuffer
+import java.nio.channels.{NonWritableChannelException, SeekableByteChannel}
 
+import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipFile}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** S-4 ingest edge: ZIP expansion (reference scripts/extract_abr.py:
-  * 93-110 downloads the ABR bulk ZIP and iterates member XMLs in one
-  * Python process). Spark-native shape: a `binaryFile` scan of the ZIP
-  * archives — one task per archive — expands members to plain XML files
-  * in a staging directory, and the XML relation ([[AbrXml.read]]) then
-  * scans those with ordinary split parallelism. Expansion is a narrow
-  * per-file map (no shuffle); at 100 TB the archives distribute across
-  * executors and the staging dir is object storage.
+/** S-4 ingest edge: the ABR bulk ZIPs (reference scripts/extract_abr.py:
+  * 93-110 downloads the bulk ZIP and iterates its member XMLs in one
+  * Python process). The driver lists every member from each archive's
+  * central directory; [[AbrXml]] packs whole members into tasks and each
+  * task inflates its members straight into the StAX record parser — one
+  * pass over the bytes, nothing staged, no archive held in memory.
+  * Archives are read through the Hadoop FileSystem with the driver's
+  * configuration, so they can live on HDFS or object storage.
   */
 object AbrZip {
 
-  /** 16 hex chars of md5 — the per-archive / per-member namespace key.
-    * A 32-bit hashCode birthday-collides at ~77k archives (a real bulk
-    * -extract count); 64 bits of md5 pushes the bound past 10^9. */
-  private def md5Prefix(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    d.take(8).map(b => f"${b & 0xff}%02x").mkString
-  }
-
-  /** Hadoop `Configuration` is not `Serializable`; this carries the
-    * DRIVER's resolved configuration (core-site + every `spark.hadoop.*`
-    * conf, i.e. object-store credentials and `fs.defaultFS`) into the
-    * task closure via Hadoop's own wire format. A bare
-    * `new Configuration()` on the executor would see only classpath
-    * *-site.xml — no session conf — and with a schemeless staging path
-    * would silently resolve to `file://` on each executor's local disk. */
-  private class SerializableConf(@transient var value: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
-  /** Expand every member of every ZIP under `zipGlob` into `outDir`.
-    * Returns the member manifest (zip, member, bytes written) — also the
-    * natural input to the S-3 processed-files ledger.
-    *
-    * Collision safety: members land under a per-archive subdirectory
-    * (64-bit md5 of the zip path — two ZIPs with identically-named
-    * members cannot overwrite each other short of an md5-64 collision),
-    * and each member file name carries the md5 of the RAW member path
-    * before sanitization (`a/b.xml` vs `a_b.xml` stay distinct).
-    * Callers wanting run isolation should stage into a fresh directory
-    * — [[readZipped]] does.
-    *
-    * Writes go through the Hadoop FileSystem resolved from the target
-    * path with the DRIVER's session configuration shipped into the
-    * task (see [[SerializableConf]]), so the staging dir can be HDFS
-    * or object storage with `spark.hadoop.*`-supplied credentials — a
-    * `java.io` write would land on each executor's local disk where
-    * the driver-side XML scan could never see it. */
-  def expand(spark: SparkSession, zipGlob: String, outDir: String): DataFrame = {
-    import spark.implicits._
-    val bin = spark.read.format("binaryFile").load(zipGlob)
-      .select(col("path"), col("content"))
-    val serConf = new SerializableConf(spark.sparkContext.hadoopConfiguration)
-    bin.as[(String, Array[Byte])].mapPartitions { it =>
-      val conf = serConf.value
-      it.flatMap { case (zipPath, bytes) =>
-        val zipDir = new org.apache.hadoop.fs.Path(outDir, s"zip_${md5Prefix(zipPath)}")
-        val fs = zipDir.getFileSystem(conf)
-        fs.mkdirs(zipDir)
-        val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
-        try {
-          // the ZIP format permits two entries with ONE name (appended/
-          // rebuilt archives) — they must land in distinct targets or
-          // the second member's bytes are silently dropped while the
-          // manifest still reports them written. Stream order is
-          // deterministic, so the occurrence suffix is identical across
-          // speculative attempts and the publish-once rename still holds.
-          val occurrences = scala.collection.mutable.HashMap.empty[String, Int]
-          Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
-            .filterNot(_.isDirectory)
-            .map { entry =>
-              val raw = entry.getName
-              val occ = occurrences.getOrElse(raw, 0)
-              occurrences.update(raw, occ + 1)
-              val safeName =
-                s"m${md5Prefix(raw)}_${if (occ == 0) "" else s"dup${occ}_"}" +
-                  raw.replaceAll("[/\\\\]", "_")
-              // write to an attempt-unique temp name, then rename into
-              // the deterministic target: with speculative execution
-              // two attempts can run CONCURRENTLY, and interleaved
-              // writes to one key on local/object-store filesystems
-              // would leave a short member file the XML read silently
-              // treats as truncated input. Rename gives each attempt a
-              // complete private write; whichever attempt publishes
-              // first wins (both wrote identical bytes — the member is
-              // a deterministic function of the zip), the loser just
-              // discards its temp.
-              val target = new org.apache.hadoop.fs.Path(zipDir, safeName)
-              val tmp = new org.apache.hadoop.fs.Path(zipDir,
-                s".${safeName}.tmp_${java.util.UUID.randomUUID().toString.take(12)}")
-              val out = fs.create(tmp, true)
-              val n =
-                try {
-                  val buf = new Array[Byte](64 * 1024)
-                  var total = 0L
-                  var r = zin.read(buf)
-                  while (r >= 0) {
-                    out.write(buf, 0, r); total += r; r = zin.read(buf)
-                  }
-                  total
-                } finally out.close()
-              if (fs.exists(target) || !fs.rename(tmp, target)) {
-                // a concurrent attempt already published a complete
-                // copy — drop ours
-                fs.delete(tmp, false)
-                // ...but only if someone really did publish: a rename
-                // that failed with NO winner present (permissions, a
-                // dying filesystem) would otherwise silently lose the
-                // member from the staged corpus
-                if (!fs.exists(target)) throw new java.io.IOException(
-                  s"failed to publish zip member $target and no " +
-                    "concurrent attempt did either — refusing to drop it")
-              }
-              (zipPath, raw, n)
-            }.toList
-        } finally zin.close()
-      }
-    }.toDF("zip", "member", "bytes")
-  }
-
-  /** Full S-4 lifecycle: expand ZIPs, then read the member XMLs into
-    * the staging_abr shape. Stages into a FRESH unique subdirectory per
-    * run so stale members from prior runs can never leak into the scan. */
+  /** Every member of every ZIP under `zipGlob`, parsed into the
+    * staging_abr shape. Two entries with one name (appended or rebuilt
+    * archives) and same-named members of different archives are all
+    * read. `stagingDir` is kept for callers of the former expand-then-
+    * parse lifecycle; nothing is written under it. */
   def readZipped(spark: SparkSession, zipGlob: String, stagingDir: String): DataFrame = {
-    val runDir = s"$stagingDir/run_${java.util.UUID.randomUUID().toString.take(8)}"
-    expand(spark, zipGlob, runDir).count() // materialize the expansion
-    AbrXml.read(spark, s"$runDir/*/*")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val members = AbrXml.listFiles(spark, zipGlob).flatMap { f =>
+      val path = f.getPath.toString
+      withZip(path, conf) { zip =>
+        val entries = physicalOrder(zip)
+        entries.indices.filterNot(i => entries(i).isDirectory).map { i =>
+          val e = entries(i)
+          AbrXml.Member(path, i, s"$path!${e.getName}",
+            if (e.getSize >= 0) e.getSize else e.getCompressedSize)
+        }
+      }
+    }
+    AbrXml.scan(spark, members, zipGlob)
+  }
+
+  /** The `entry`-th member (central-directory order) of the archive at
+    * `file`, inflating as it is read; closing it closes the archive. */
+  private[sources] def openEntry(file: String, entry: Int, conf: Configuration): InputStream = {
+    val zip = open(file, conf)
+    try {
+      val in = zip.getInputStream(physicalOrder(zip)(entry))
+      new java.io.FilterInputStream(in) {
+        override def close(): Unit = try super.close() finally zip.close()
+      }
+    } catch { case e: Throwable => zip.close(); throw e }
+  }
+
+  private def physicalOrder(zip: ZipFile): IndexedSeq[ZipArchiveEntry] = {
+    val it = zip.getEntriesInPhysicalOrder
+    val out = IndexedSeq.newBuilder[ZipArchiveEntry]
+    while (it.hasMoreElements) out += it.nextElement()
+    out.result()
+  }
+
+  private def open(file: String, conf: Configuration): ZipFile = {
+    val p = new Path(file)
+    val fs = p.getFileSystem(conf)
+    val channel = new HadoopChannel(fs.open(p), fs.getFileStatus(p).getLen)
+    try ZipFile.builder().setSeekableByteChannel(channel).get()
+    catch { case e: Throwable => channel.close(); throw e }
+  }
+
+  private def withZip[T](file: String, conf: Configuration)(f: ZipFile => T): T = {
+    val zip = open(file, conf)
+    try f(zip) finally zip.close()
+  }
+
+  /** Read-only SeekableByteChannel over a Hadoop stream — the random
+    * access a ZIP central directory needs, on any Hadoop FileSystem.
+    * Seeks only when a read does not continue where the last one ended. */
+  private final class HadoopChannel(in: FSDataInputStream, length: Long) extends SeekableByteChannel {
+    private var pos = 0L
+    private var streamPos = 0L
+    private var isOpenNow = true
+    private val buf = new Array[Byte](64 * 1024)
+
+    override def read(dst: ByteBuffer): Int = {
+      if (pos >= length) return -1
+      if (streamPos != pos) { in.seek(pos); streamPos = pos }
+      val n = in.read(buf, 0, math.min(buf.length, dst.remaining))
+      if (n > 0) { dst.put(buf, 0, n); pos += n; streamPos += n }
+      n
+    }
+    override def position(): Long = pos
+    override def position(p: Long): SeekableByteChannel = { pos = p; this }
+    override def size(): Long = length
+    override def write(src: ByteBuffer): Int = throw new NonWritableChannelException
+    override def truncate(size: Long): SeekableByteChannel = throw new NonWritableChannelException
+    override def isOpen: Boolean = isOpenNow
+    override def close(): Unit = if (isOpenNow) { isOpenNow = false; in.close() }
   }
 }

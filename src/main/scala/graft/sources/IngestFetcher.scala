@@ -29,8 +29,8 @@ trait IngestFetcher {
 
   /** Stage `uris` under `destDir` (created if absent); returns the
     * staged local paths in input order. File names are
-    * collision-namespaced the same way [[AbrZip.expand]] namespaces ZIP
-    * members: a hash of the full source URI prefixes the base name. */
+    * collision-namespaced: a hash of the full source URI prefixes the
+    * base name. */
   def stage(uris: Seq[String], destDir: String): Seq[String] = {
     Files.createDirectories(Paths.get(destDir))
     uris.map { uri =>

@@ -84,6 +84,7 @@ class CodegenSpec extends SparkSpec {
         MinHashSig.column(ShingleHashes64.column(col("text"), 2), 8)).as("sigagree"),
       SortedDistinctLongs.column(ShingleHashes64.column(col("text"), 3)).as("sorteddistinct"),
       // token-string kernels
+      TokenExprs.lower(col("ln")).as("lower"),
       TokenExprs.tokenSortJoin(col("left_norm")).as("toksortjoin"),
       TokenExprs.tokenSet(col("left_norm")).as("tokset"),
       TokenExprs.charNgramSet(col("text"), 3, 60).as("charngrams"),
@@ -112,7 +113,7 @@ class CodegenSpec extends SparkSpec {
       classOf[WordShingles], classOf[PickJoin],
       classOf[UnkTextExpr], classOf[PolyFingerprint],
       classOf[WordlistHitsExpr], classOf[SumTokenChars],
-      classOf[ChunkStartsExpr], classOf[PqReconSqErr])
+      classOf[ChunkStartsExpr], classOf[PqReconSqErr], classOf[LowerCase])
     for (k <- kernels)
       assert(!classOf[CodegenFallback].isAssignableFrom(k),
         s"${k.getSimpleName} still extends CodegenFallback")

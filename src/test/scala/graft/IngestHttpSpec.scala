@@ -16,7 +16,7 @@ import graft.sources.{AbrZip, HttpFetcher, Warc}
   *  - S-6→S-1→F-1..F-3: fetch the gz crawl index, slice it, fetch the
   *    listed WARC segments, parse, filter, extract companies;
   *  - S-7→S-4: fetch the CKAN-style catalog JSON, discover the ZIP
-  *    resources, fetch them, expand members, parse the XML.
+  *    resources, fetch them, parse every member's XML.
   *
   * The engine operators only ever see staged local files — swapping the
   * transport (HTTP here, filesystem elsewhere, object store at scale)
@@ -47,11 +47,6 @@ class IngestHttpSpec extends SparkSpec {
   private def warcRec(uri: String, body: String, typ: String = "response"): String =
     s"WARC/1.0\r\nWARC-Type: $typ\r\nWARC-Target-URI: $uri\r\n" +
       s"Content-Length: ${body.length}\r\n\r\n$body\r\n\r\n"
-
-  private def abrXml(abn: String, name: String): String =
-    s"""<Transfer><ABR><ABN status="ACT" ABNStatusFromDate="20150701">$abn</ABN>
-       |<MainEntity><NonIndividualName><NonIndividualNameText>$name</NonIndividualNameText></NonIndividualName></MainEntity>
-       |</ABR></Transfer>""".stripMargin
 
   /** Loopback server dishing a fixed route → bytes map; 404 otherwise. */
   private def withServer(routes: Map[String, Array[Byte]])(body: String => Unit): Unit = {
@@ -117,8 +112,8 @@ class IngestHttpSpec extends SparkSpec {
         |]}}""".stripMargin
     withServer(Map(
       "/api/3/action/package_show" -> catalog.getBytes("UTF-8"),
-      "/abr/bulk1.zip" -> zip("part1.xml" -> abrXml("51824753556", "ACME PTY LTD")),
-      "/abr/bulk2.zip" -> zip("part1.xml" -> abrXml("61824753558", "BETA CO")),
+      "/abr/bulk1.zip" -> zip("part1.xml" -> AbrFixtures.member("51824753556", "ACME PTY LTD")),
+      "/abr/bulk2.zip" -> zip("part1.xml" -> AbrFixtures.member("61824753558", "BETA CO")),
       "/abr/notes.txt" -> "not a zip".getBytes("UTF-8"))) { base =>
       val root = Files.createTempDirectory("graft-http-abr")
       val fetcher = new HttpFetcher()

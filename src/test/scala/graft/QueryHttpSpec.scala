@@ -145,4 +145,33 @@ class QueryHttpSpec extends SparkSpec {
         s"body must be one flat JSON object: $b")
     } finally srv.stop()
   }
+
+  test("search matches non-ASCII names case-insensitively") {
+    val names = unified.unionByName(Seq(
+      ("81824753551", "ÉCOLE ÜBER İSTANBUL PTY", "Education", "Active", "4, 0148", "0148",
+        "4", "ΟΔΟΣ HOLDINGS", 80)).toDF(unified.columns.toSeq: _*))
+    val srv = new QueryHttpServer(names)
+    val port = srv.start()
+    try {
+      def enc(q: String) = java.net.URLEncoder.encode(q, "UTF-8")
+      for (q <- Seq("école", "ÜBER", "οδος")) {
+        val (st, body) = get(port, s"/companies/search?name=${enc(q)}")
+        assert(st == 200 && body.contains("81824753551") && !body.contains("51824753556"),
+          s"search '$q': $st $body")
+      }
+    } finally srv.stop()
+  }
+
+  test("QueryApi plans carry no Lower, Upper or InitCap node") {
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+    import graft.api.QueryApi
+    for (df <- Seq(QueryApi.byKey(unified, "51824753556"), QueryApi.search(unified, "Beta"),
+        QueryApi.byState(unified, "1"))) {
+      val qe = df.queryExecution
+      for (plan <- Seq(qe.analyzed, qe.optimizedPlan, qe.executedPlan);
+           node <- plan.collect { case n => n }; e <- node.expressions)
+        assert(!e.exists(x => x.isInstanceOf[Lower] || x.isInstanceOf[Upper] || x.isInstanceOf[InitCap]),
+          s"case-mapping node in ${plan.getClass.getSimpleName}: $e")
+    }
+  }
 }

@@ -75,6 +75,24 @@ class SimilaritySpec extends SparkSpec {
     assert(r.getInt(0) == 100 && r.getInt(1) == 100 && r.getInt(2) == 100)
   }
 
+  test("TokenSetRatio100 propagates null; only the twin boundary scores a null side 100") {
+    val sets = Seq((Some(Seq("a", "b")), None), (None, Some(Seq("a"))), (None, None),
+      (Some(Seq("a", "b")), Some(Seq("a", "c"))))
+      .toDF("ta", "tb")
+    def run() = sets.select(
+      graft.plans.TokenExprs.tokenSetRatio100($"ta", $"tb").as("kernel"),
+      Similarity.tokenSetRatioFromSets($"ta", $"tb").as("boundary"),
+      Similarity.tokenSetRatioFromSetsDeclarative($"ta", $"tb").as("twin")).collect()
+    for (rows <- Seq(run(), {
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      try run() finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    })) {
+      assert(rows.take(3).forall(r => r.isNullAt(0) && r.getInt(1) == 100 && r.getInt(2) == 100),
+        rows.mkString("; "))
+      assert(rows(3).getInt(0) == rows(3).getInt(1) && rows(3).getInt(1) == rows(3).getInt(2))
+    }
+  }
+
   test("properties on corpus: bounds 0..100 and symmetry") {
     val names = spark.read.parquet(s"$sf/part.parquet").select($"p_name")
     val pairs = names.select($"p_name".as("a"))

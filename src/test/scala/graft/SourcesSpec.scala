@@ -11,33 +11,8 @@ class SourcesSpec extends SparkSpec {
   private def tmpDir(): Path = Files.createTempDirectory("graft-src")
 
   test("ABR XML: field navigation, attributes, date coalesce, address concat") {
-    val xml =
-      """<Transfer>
-        |<ABR recordLastUpdatedDate="20240101">
-        |  <ABN status="ACT" ABNStatusFromDate="20150701">51824753556</ABN>
-        |  <EntityType><EntityTypeInd>PRV</EntityTypeInd><EntityTypeText>Australian Private Company</EntityTypeText></EntityType>
-        |  <MainEntity>
-        |    <NonIndividualName type="MN"><NonIndividualNameText>ACME WIDGETS PTY LTD</NonIndividualNameText></NonIndividualName>
-        |    <BusinessAddress><AddressDetails><State>NSW</State><Postcode>2000</Postcode></AddressDetails></BusinessAddress>
-        |  </MainEntity>
-        |  <GST status="ACT" GSTStatusFromDate="20000701"/>
-        |</ABR>
-        |<ABR>
-        |  <ABN status="SUS" ABNStatusFromDate="not-a-date">61824753558</ABN>
-        |  <MainEntity><NonIndividualName><NonIndividualNameText>GAMMA TRUST</NonIndividualNameText></NonIndividualName></MainEntity>
-        |</ABR>
-        |<ABR>
-        |  <ABN status="CAN" ABNStatusFromDate="">41824753557</ABN>
-        |  <EntityType><EntityTypeText>Sole Trader</EntityTypeText></EntityType>
-        |  <MainEntity>
-        |    <NonIndividualName><NonIndividualNameText>BETA CO</NonIndividualNameText></NonIndividualName>
-        |    <BusinessAddress><AddressDetails><State>VIC</State></AddressDetails></BusinessAddress>
-        |  </MainEntity>
-        |  <GST status="NON" GSTStatusFromDate="20010301"/>
-        |</ABR>
-        |</Transfer>""".stripMargin
     val dir = tmpDir()
-    Files.writeString(dir.resolve("abr1.xml"), xml)
+    Files.writeString(dir.resolve("abr1.xml"), AbrFixtures.fieldNav)
     val rows = AbrXml.read(spark, dir.toString + "/abr1.xml")
       .orderBy($"abn").collect()
     assert(rows.length == 3)
@@ -132,36 +107,26 @@ class SourcesSpec extends SparkSpec {
 
   test("ABR XML: garbage input fails loudly, never a silent 0-row success") {
     val dir = tmpDir()
-    Files.writeString(dir.resolve("junk.xml"), "this is not xml at all { 12345")
+    Files.writeString(dir.resolve("junk.xml"), AbrFixtures.garbage)
     val e = intercept[IllegalArgumentException] {
-      AbrXml.read(spark, dir.toString + "/junk.xml")
+      AbrXml.read(spark, dir.toString + "/junk.xml").collect()
     }
     assert(e.getMessage.contains("no <ABR> records"))
   }
 
   test("ABR XML: a repeated projected element fails loudly, never silent nulls") {
     val dir = tmpDir()
-    // two GST siblings make the corpus-wide inferred type array<struct>
-    val xml =
-      """<Records><ABR><ABN status="ACT" ABNStatusFromDate="20150701">51824753556</ABN>
-        |<GST GSTStatusFromDate="20150701"/><GST GSTStatusFromDate="20160701"/>
-        |<EntityType><EntityTypeText>Co</EntityTypeText></EntityType>
-        |</ABR></Records>""".stripMargin
-    Files.writeString(dir.resolve("dup.xml"), xml)
+    // two GST siblings in one record
+    Files.writeString(dir.resolve("dup.xml"), AbrFixtures.repeatedGst)
     val e = intercept[IllegalArgumentException] {
       AbrXml.read(spark, dir.toString + "/dup.xml").collect()
     }
     assert(e.getMessage.contains("REPEATED element"))
 
-    // a repeated LEAF (the path ENDS at the array) must also throw —
-    // cast("string") would otherwise stringify it to "[a, b]" silently
+    // a repeated LEAF must also throw — a join of the values would be
+    // as silent as dropping them
     val leafDir = tmpDir()
-    val leafXml =
-      """<Records><ABR><ABN status="ACT" ABNStatusFromDate="20150701">51824753556</ABN>
-        |<EntityType><EntityTypeText>Co</EntityTypeText>
-        |<EntityTypeText>Trust</EntityTypeText></EntityType>
-        |</ABR></Records>""".stripMargin
-    Files.writeString(leafDir.resolve("leaf.xml"), leafXml)
+    Files.writeString(leafDir.resolve("leaf.xml"), AbrFixtures.repeatedLeaf)
     val e2 = intercept[IllegalArgumentException] {
       AbrXml.read(spark, leafDir.toString + "/leaf.xml").collect()
     }
@@ -205,62 +170,12 @@ class SourcesSpec extends SparkSpec {
     assert(paths == Seq("crawl/seg1.warc.gz", "crawl/seg2.warc.gz", "crawl/seg3.warc.gz"))
   }
 
-  test("ZIP ingest edge: expand members, read XMLs, ledger manifest (S-4)") {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
-    def abrXml(abn: String, name: String) =
-      s"""<Transfer><ABR><ABN status="ACT" ABNStatusFromDate="20150701">$abn</ABN>
-         |<MainEntity><NonIndividualName><NonIndividualNameText>$name</NonIndividualNameText></NonIndividualName></MainEntity>
-         |</ABR></Transfer>""".stripMargin
-    val dir = tmpDir()
-    def writeZip(file: java.nio.file.Path, members: Seq[(String, String, String)]): Unit = {
-      val zout = new ZipOutputStream(Files.newOutputStream(file))
-      for ((member, abn, name) <- members) {
-        zout.putNextEntry(new ZipEntry(member))
-        zout.write(abrXml(abn, name).getBytes("UTF-8"))
-        zout.closeEntry()
-      }
-      zout.close()
-    }
-    // collision bait: both ZIPs carry a member named part1.xml, and zip1
-    // carries 'a/b.xml' vs 'a_b.xml' (same name after sanitization)
-    writeZip(dir.resolve("bulk1.zip"), Seq(
-      ("part1.xml", "51824753556", "ACME PTY LTD"),
-      ("a/b.xml", "11111111111", "SLASH CO"),
-      ("a_b.xml", "22222222222", "UNDERSCORE CO")))
-    writeZip(dir.resolve("bulk2.zip"), Seq(
-      ("part1.xml", "61824753558", "BETA CO")))
-    val staging = dir.resolve("staging").toString
-    val manifest = graft.sources.AbrZip.expand(spark, s"$dir/*.zip", staging)
-      .collect()
-    assert(manifest.length == 4)
-    assert(manifest.forall(_.getLong(2) > 0))
-    val rows = graft.sources.AbrXml.read(spark, s"$staging/*/*")
-      .orderBy($"abn").collect()
-    assert(rows.map(_.getString(0)).toSeq ==
-      Seq("11111111111", "22222222222", "51824753556", "61824753558"))
-    assert(rows.map(_.getString(1)).toSeq ==
-      Seq("SLASH CO", "UNDERSCORE CO", "ACME PTY LTD", "BETA CO"))
-    // readZipped stages into a fresh run dir: the pre-existing staging
-    // files above must not leak into its scan
-    val viaLifecycle = graft.sources.AbrZip.readZipped(spark, s"$dir/*.zip", staging)
-    assert(viaLifecycle.count() == 4)
-  }
-
   test("ABR XML: an extract whose ABN carries no attributes still ingests") {
-    // with no _status/_ABNStatusFromDate attributes anywhere, the ABN
-    // field infers as a plain string leaf — ABN._VALUE resolves absent
-    // and without the leaf fallback every abn would be null and the
-    // non-empty filter would silently empty the corpus
-    val xml =
-      """<Transfer>
-        |<ABR>
-        |  <ABN>51824753556</ABN>
-        |  <MainEntity><NonIndividualName><NonIndividualNameText>PLAIN CO</NonIndividualNameText></NonIndividualName></MainEntity>
-        |  <GST status="ACT" GSTStatusFromDate="20010301"/>
-        |</ABR>
-        |</Transfer>""".stripMargin
+    // with no status/ABNStatusFromDate attributes anywhere the ABN is a
+    // plain text leaf — it must still yield the abn, or the non-empty
+    // filter would silently empty the corpus
     val dir = tmpDir()
-    Files.writeString(dir.resolve("plain.xml"), xml)
+    Files.writeString(dir.resolve("plain.xml"), AbrFixtures.plainAbn)
     val rows = AbrXml.read(spark, dir.toString + "/plain.xml").collect()
     assert(rows.length == 1, "leaf-ABN extract must not silently empty")
     assert(rows(0).getString(0) == "51824753556")
@@ -269,27 +184,36 @@ class SourcesSpec extends SparkSpec {
     assert(rows(0).getDate(7).toString == "2001-03-01") // GST fallback
   }
 
-  test("ZIP expand stages BOTH members when one archive repeats an entry name") {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
+  test("ZIP ingest edge: every member of every archive, same-named members included (S-4)") {
+    import AbrFixtures.{member, writeZip}
+    val dir = tmpDir()
+    // collision bait: both ZIPs carry a member named part1.xml, and zip1
+    // carries 'a/b.xml' vs 'a_b.xml'
+    writeZip(dir.resolve("bulk1.zip"), Seq(
+      "part1.xml" -> member("51824753556", "ACME PTY LTD"),
+      "a/b.xml" -> member("11111111111", "SLASH CO"),
+      "a_b.xml" -> member("22222222222", "UNDERSCORE CO")))
+    writeZip(dir.resolve("bulk2.zip"), Seq(
+      "part1.xml" -> member("61824753558", "BETA CO")))
+    val staging = dir.resolve("staging")
+    val rows = graft.sources.AbrZip.readZipped(spark, s"$dir/*.zip", staging.toString)
+      .orderBy($"abn").collect()
+    assert(rows.map(_.getString(0)).toSeq ==
+      Seq("11111111111", "22222222222", "51824753556", "61824753558"))
+    assert(rows.map(_.getString(1)).toSeq ==
+      Seq("SLASH CO", "UNDERSCORE CO", "ACME PTY LTD", "BETA CO"))
+    assert(!Files.exists(staging), "readZipped must write nothing under its staging dir")
+  }
+
+  test("ZIP ingest reads BOTH members when one archive repeats an entry name") {
     // the ZIP format permits two entries with one name (appended/
     // rebuilt archives); ZipOutputStream refuses to write them, so
-    // build a legal dup by byte-patching a same-length sibling name —
-    // ZipInputStream reads local headers sequentially and sees two
-    // entries both named members/a1.xml with DIFFERENT contents
-    def abrXml(abn: String, name: String) =
-      s"""<Transfer><ABR><ABN status="ACT" ABNStatusFromDate="20150701">$abn</ABN>
-         |<MainEntity><NonIndividualName><NonIndividualNameText>$name</NonIndividualNameText></NonIndividualName></MainEntity>
-         |</ABR></Transfer>""".stripMargin
+    // build a legal dup by byte-patching a same-length sibling name in
+    // both the local headers and the central directory
     val dir = tmpDir()
-    val zipPath = dir.resolve("dup.zip")
-    val zout = new ZipOutputStream(Files.newOutputStream(zipPath))
-    for ((m, abn, nm) <- Seq(("members/a1.xml", "51824753556", "FIRST CO"),
-      ("members/a2.xml", "61824753558", "SECOND CO"))) {
-      zout.putNextEntry(new ZipEntry(m))
-      zout.write(abrXml(abn, nm).getBytes("UTF-8"))
-      zout.closeEntry()
-    }
-    zout.close()
+    val zipPath = AbrFixtures.writeZip(dir.resolve("dup.zip"), Seq(
+      "members/a1.xml" -> AbrFixtures.member("51824753556", "FIRST CO"),
+      "members/a2.xml" -> AbrFixtures.member("61824753558", "SECOND CO")))
     val bytes = Files.readAllBytes(zipPath)
     val from = "members/a2.xml".getBytes("UTF-8")
     val to = "members/a1.xml".getBytes("UTF-8")
@@ -297,54 +221,39 @@ class SourcesSpec extends SparkSpec {
       if (from.indices.forall(j => bytes(i + j) == from(j)))
         to.indices.foreach(j => bytes(i + j) = to(j))
     Files.write(zipPath, bytes)
-    val staging = dir.resolve("staging").toString
-    val manifest = graft.sources.AbrZip.expand(spark, zipPath.toString, staging)
-      .collect()
-    assert(manifest.length == 2 &&
-      manifest.forall(_.getString(1) == "members/a1.xml"))
-    // BOTH contents staged — the second member must not be silently
-    // dropped as a "concurrent attempt" of the first
-    val abns = graft.sources.AbrXml.read(spark, s"$staging/*/*")
+    val abns = graft.sources.AbrZip.readZipped(spark, zipPath.toString, s"$dir/staging")
       .orderBy($"abn").collect().map(_.getString(0)).toSeq
     assert(abns == Seq("51824753556", "61824753558"),
       s"duplicate-named member's content lost: $abns")
   }
 
-  test("ZIP expand refuses to silently drop a member when publish fails with no winner") {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
+  test("ZIP ingest: packed and one-member-per-task runs read identical rows") {
+    import AbrFixtures.{member, writeZip}
     val dir = tmpDir()
-    val zip = dir.resolve("bulk.zip")
-    val zout = new ZipOutputStream(Files.newOutputStream(zip))
-    zout.putNextEntry(new ZipEntry("part1.xml"))
-    zout.write("<Transfer/>".getBytes("UTF-8"))
-    zout.closeEntry(); zout.close()
-    // a filesystem whose rename always fails, with no concurrent
-    // attempt to publish the target: expand must error, not return a
-    // manifest that silently omits the member
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.norename.impl", classOf[NoRenameFs].getName)
-    val e = intercept[Throwable] {
-      graft.sources.AbrZip.expand(spark, zip.toString,
-        s"norename:$dir/staging").collect()
+    writeZip(dir.resolve("bulk1.zip"), (1 to 5).map(i =>
+      s"part$i.xml" -> member(f"5182475$i%04d", s"CO $i")))
+    writeZip(dir.resolve("bulk2.zip"), (6 to 8).map(i =>
+      s"part$i.xml" -> member(f"5182475$i%04d", s"CO $i")))
+    def read(maxBytes: String) = {
+      val key = "spark.sql.files.maxPartitionBytes"
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, maxBytes)
+      try {
+        val df = graft.sources.AbrZip.readZipped(spark, s"$dir/*.zip", s"$dir/staging")
+        (df.rdd.getNumPartitions, df.orderBy($"abn").collect().map(_.toString).toSeq)
+      } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("refusing to drop")),
-      s"expected the publish guard, got: ${messages(e).take(3)}")
+    val (packedTasks, packed) = read("128m")
+    val (splitTasks, split) = read("1")
+    assert(packedTasks == 1 && splitTasks == 8, s"tasks: packed $packedTasks, split $splitTasks")
+    assert(packed.size == 8)
+    assert(packed == split)
   }
 
   test("ingest fetcher seam stages objects for the ZIP/XML readers") {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
     val dir = tmpDir()
     val zip = dir.resolve("remote-bulk.zip")
-    val zout = new ZipOutputStream(Files.newOutputStream(zip))
-    zout.putNextEntry(new ZipEntry("part1.xml"))
-    zout.write(
-      """<Transfer><ABR><ABN status="ACT" ABNStatusFromDate="20150701">51824753556</ABN>
-        |<MainEntity><NonIndividualName><NonIndividualNameText>ACME PTY LTD</NonIndividualNameText></NonIndividualName></MainEntity>
-        |</ABR></Transfer>""".stripMargin.getBytes("UTF-8"))
-    zout.closeEntry(); zout.close()
+    AbrFixtures.writeZip(zip, Seq("part1.xml" -> AbrFixtures.member("51824753556", "ACME PTY LTD")))
     // same-basename URIs from different "remote" directories must not
     // collide in the staging dir
     val other = dir.resolve("elsewhere")
@@ -383,13 +292,4 @@ class SourcesSpec extends SparkSpec {
       df.schema.fields.map(f => (f.name, f.dataType.sql)).toSeq)
     assert(back.orderBy("id").collect().map(_.getString(1)).toSeq == Seq("a", "b"))
   }
-}
-
-/** RawLocalFileSystem whose rename always fails — drives AbrZip's
-  * publish-failure guard test above. Hadoop instantiates it via the
-  * `fs.norename.impl` conf key; top-level with a no-arg constructor. */
-class NoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("norename:///")
-  override def rename(src: org.apache.hadoop.fs.Path,
-                      dst: org.apache.hadoop.fs.Path): Boolean = false
 }
