@@ -12,5 +12,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS -Xmx"${MEM:-48g}" -XX:+UseG1GC -XX:ReservedCodeCacheSize=512m \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" "$@"

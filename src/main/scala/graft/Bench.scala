@@ -1,19 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver testdata events.parquet stores TIMESTAMP(NANOS): read as bigint nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warm the JVM (codegen, parquet reader, shuffle paths, custom
     // expression kernels) so per-query timings measure the queries, not
     // first-touch JIT of the hot eval loops.
@@ -44,24 +33,14 @@ object Bench {
     // (identical shuffle volume + inflated wall = contention; grown
     // shuffle volume = plan change). See BASELINE.md "Contention rule".
     val tap = org.apache.spark.graft.MetricsBridge.install(spark.sparkContext)
-    def metricsDelta[T](f: => T): (T, Array[Long]) = {
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      val before = tap.snapshot()
-      val r = f
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      val after = tap.snapshot()
-      (r, after.zip(before).map { case (a, b) => a - b })
-    }
     def metricsJson(d: Array[Long]): String =
       s"""{"shuffle_read_b":${d(0)},"shuffle_write_b":${d(1)},""" +
         s""""spill_mem_b":${d(2)},"spill_disk_b":${d(3)},""" +
         s""""gc_ms":${d(4)},"cpu_sec":${d(5) / 1e9}}"""
-    val tPre = System.nanoTime()
-    val (preErr, preMetrics) = metricsDelta {
+    val (preErr, prebuildSec, preMetrics) = tap.measure(spark.sparkContext) {
       try { graft.queries.DedupQueries.prebuildStores(spark, sfDir); None }
       catch { case e: Throwable => Some(e.toString.take(200)) }
     }
-    val prebuildSec = (System.nanoTime() - tPre) / 1e9
     // sorted order: deterministic run order across builds, so shared
     // memoized intermediates (the match table, the unified table) are
     // attributed to the same query every round
@@ -69,13 +48,11 @@ object Bench {
     // in the emitted JSON's "errors" map (a regression must not ride
     // through a round as a silently-fast entry).
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val (err, metrics) = metricsDelta {
+      val (err, wall, metrics) = tap.measure(spark.sparkContext) {
         try { fn(spark, sfDir).count(); None }
         catch { case e: Throwable => Some(e.toString.take(200)) }
       }
-      val sec = if (err.isEmpty) (System.nanoTime() - t0) / 1e9 else -1.0
-      (name, sec, err, metrics)
+      (name, if (err.isEmpty) wall else -1.0, err, metrics)
     }
     def jstr(s: String): String =
       "\"" + s.flatMap {

@@ -31,6 +31,19 @@ object SparkEntry {
       graft.queries.TemporalQueries.queries ++
       graft.queries.CurationQueries.queries
 
+  /** Names of [[queries]] to run, sorted: those in the comma-separated
+    * `only` list (`SPARK_GRAFT_ONLY` by default) when it is set, else
+    * all. An unknown name fails loudly — a typo would otherwise filter
+    * everything out and read as a green, empty run. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Seq[String] =
+    only.fold(queries.keys.toSeq) { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq
+      val unknown = names.filterNot(queries.contains)
+      require(unknown.isEmpty,
+        s"query names not in SparkEntry.queries: ${unknown.mkString(", ")}")
+      names
+    }.sorted
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,39 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver testdata events.parquet stores TIMESTAMP(NANOS), which the
-      // vectorized parquet reader rejects; read as bigint nanos instead.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // Local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 runs (and dumps
     // oracles for) just those queries. Unset for the driver's full run.
-    // Unknown names fail loudly — a typo would otherwise filter
-    // EVERYTHING out and read as a green (empty) run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
-    def keep(name: String) = only.forall(_.contains(name))
-    val failures = SparkEntry.queries.toSeq.filter(p => keep(p._1))
-        .sortBy(_._1).flatMap { case (name, fn) =>
+    val names = SparkEntry.selected()
+    val spark = GraftSession.local()
+    new java.io.File(outDir).mkdirs()
+    def keep(name: String) = names.contains(name)
+    val failures = names.flatMap { name =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         None
       } catch { case e: Throwable =>

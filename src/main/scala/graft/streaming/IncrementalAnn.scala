@@ -310,25 +310,14 @@ object IncrementalAnn {
     * codebook's training sample. One aggregated row to the driver —
     * but the squared error is evaluated per BATCH ROW every
     * micro-batch (the drift check), so it runs as the PqReconSqErr
-    * kernel: the declarative chain below materialized the code, the
+    * kernel: the declarative chain (`IncrementalAnnTwin` in the test
+    * tree, pinned bitwise in VectorsSpec) materialized the code, the
     * decoded array, and a zip_with product array per row and folded
-    * them with interpreted HOF lambdas (twin pinned bitwise in
-    * VectorsSpec). */
+    * them with interpreted HOF lambdas. */
   def quantizationError(df: DataFrame, vecCol: String,
                         codebook: Codebook): Double =
     df.select(avg(graft.plans.VecExprs.pqReconSqErr(col(vecCol), codebook))
       .as("mse")).head().getDouble(0)
-
-  /** [[quantizationError]]'s per-row declarative twin (parity tests). */
-  private[graft] def reconSqErrDeclarative(vecCol: String,
-                                           codebook: Codebook): org.apache.spark.sql.Column = {
-    val dec = SimilaritySearch.pqDecode(
-      graft.plans.VecExprs.pqEncode(col(vecCol), codebook), codebook)
-    aggregate(
-      zip_with(col(vecCol), dec,
-        (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
-      lit(0.0d), (acc, v) => acc + v)
-  }
 
   /** Batch-vs-store candidate generation + PQ-approximate verification,
     * mirroring `Dedup.incrementalCandidatePairs`: bucket equi-join,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measure the pair-recall cost of d10_scaled's candidate-side bucket
   * cap at a given corpus scale. Both the capped and uncapped runs
   * exact-verify every candidate at the same cosine threshold, so the
@@ -17,13 +15,7 @@ object CapRecall {
     val d = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val caps = (if (args.length > 1) args(1) else "64,2147483647")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val u = graft.queries.DedupQueries.embeddingUniverse(spark, d)
     val bits = graft.operators.SimilaritySearch.scaledLshBits(u.count())
     println(s"BITS $bits")
@@ -79,13 +71,7 @@ object CapConnectivity {
     val d = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val caps = (if (args.length > 1) args(1) else "64,r64")
       .split(",").map(_.trim).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val u = graft.queries.DedupQueries.embeddingUniverse(spark, d)
     val bits = graft.operators.SimilaritySearch.scaledLshBits(u.count())
     val gen = if (args.length > 3) args(3) else "pq"
@@ -174,13 +160,7 @@ object IncCapRecall {
     val d = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val cfgs = (if (args.length > 1) args(1) else "64,r12:128")
       .split(",").map(_.trim).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import org.apache.spark.sql.functions.col
     val store = spark.read.parquet(s"$d/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.TaskMetricsTap.cellJson
 
 /** One incremental-capstone scale cell, measured with first-touch and
   * steady state SEPARATED (SURVEY §13.6's two-column rule, made
@@ -40,39 +40,20 @@ object CapstoneRun {
     val reps = args.collectFirst { case a if a.startsWith("reps=") =>
       a.stripPrefix("reps=").toInt }.getOrElse(2)
     require(reps >= 2, s"need at least first+steady reps, got $reps")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     val tap = org.apache.spark.graft.MetricsBridge.install(spark.sparkContext)
-    def timed(f: => Unit): (Double, Array[Long]) = {
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      val before = tap.snapshot()
-      val t0 = System.nanoTime()
-      f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      (sec, tap.snapshot().zip(before).map { case (a, b) => a - b })
-    }
-    def mJson(sec: Double, d: Array[Long]): String =
-      f"""{"sec":$sec%.3f,"shuffle_read_b":${d(0)},"shuffle_write_b":${d(1)},""" +
-        f""""spill_mem_b":${d(2)},"spill_disk_b":${d(3)},"gc_ms":${d(4)},""" +
-        f""""cpu_sec":${d(5) / 1e9}%.2f}"""
 
     val fn = graft.SparkEntry.queries(name)
     val build =
       if (doPrebuild) {
-        val (s, m) = timed(graft.queries.DedupQueries.prebuildStores(spark, dir))
+        val (_, s, m) = tap.measure(spark.sparkContext)(
+          graft.queries.DedupQueries.prebuildStores(spark, dir))
         System.err.println(f"[capstone] $label $name build  ${s}%8.2f s")
-        mJson(s, m)
+        cellJson(s, m)
       } else "null"
     val runs = (1 to reps).map { i =>
-      val (sec, m) = timed { fn(spark, dir).count(); () }
+      val (_, sec, m) = tap.measure(spark.sparkContext)(fn(spark, dir).count())
       val stage = if (i == 1) "first" else if (i == reps) "steady" else s"rep$i"
       System.err.println(f"[capstone] $label $name $stage%-6s ${sec}%8.2f s  " +
         f"shuffle ${(m(0) + m(1)) / 1e6}%.0f MB  spill ${(m(2) + m(3)) / 1e6}%.0f MB")
@@ -82,7 +63,7 @@ object CapstoneRun {
     val (sSec, sM) = runs.last
     val mid = runs.drop(1).dropRight(1)
     val midJson = if (mid.isEmpty) ""
-      else s""","reps":[${mid.map { case (s, m) => mJson(s, m) }.mkString(",")}]"""
+      else s""","reps":[${mid.map { case (s, m) => cellJson(s, m) }.mkString(",")}]"""
 
     // escape interpolated strings (a dir path with a quote/backslash
     // would otherwise emit invalid JSON and break capstone_table.py)
@@ -94,8 +75,8 @@ object CapstoneRun {
         case c => c.toString
       } + "\""
     val out = s"""{"metric":"capstone","query":${js(name)},"label":${js(label)},""" +
-      s""""dir":${js(dir)},"build":$build,"first":${mJson(fSec, fM)},""" +
-      s""""steady":${mJson(sSec, sM)}$midJson}"""
+      s""""dir":${js(dir)},"build":$build,"first":${cellJson(fSec, fM)},""" +
+      s""""steady":${cellJson(sSec, sM)}$midJson}"""
     println(out)
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (out + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilaritySearch
@@ -24,16 +24,8 @@ object RecallRun {
       val Array(l, d) = kv.split("=", 2); (l, d)
     }
     val outPath = if (args.length > 1) args(1) else "target/recall_results.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.cpus
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
 
     def corpus(dir: String): DataFrame =
       spark.read.parquet(s"$dir/embeddings.parquet")

@@ -44,15 +44,7 @@ object ScaleGen {
     val Array(baseDir, outDir, multStr) = args
     val mult = multStr.toInt
     require(mult >= 1, "multiplier must be >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     generate(spark, baseDir, outDir, mult)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.TaskMetricsTap.cellJson
 
 /** Measured scale proof for the capstone operators (SCALE.md): run the
   * dedup/ANN/curation capstones at several corpus multipliers
@@ -45,32 +45,10 @@ object ScaleRun {
       val Array(l, d) = kv.split("=", 2); (l, d)
     }
     val outPath = if (args.length > 1) args(1) else "target/scale_results.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.cpus
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
 
     val tap = org.apache.spark.graft.MetricsBridge.install(spark.sparkContext)
-    def timedWithMetrics(f: => Unit): (Double, Array[Long]) = {
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      val before = tap.snapshot()
-      val t0 = System.nanoTime()
-      f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      val after = tap.snapshot()
-      (sec, after.zip(before).map { case (a, b) => a - b })
-    }
-    def mJson(sec: Double, d: Array[Long]): String =
-      f"""{"sec":$sec%.3f,"shuffle_read_b":${d(0)},"shuffle_write_b":${d(1)},""" +
-        f""""spill_mem_b":${d(2)},"spill_disk_b":${d(3)},"gc_ms":${d(4)},""" +
-        f""""cpu_sec":${d(5) / 1e9}%.2f}"""
 
     // JVM warmup: codegen, parquet reader, shuffle, kernels
     try {
@@ -111,11 +89,11 @@ object ScaleRun {
       // minutes of store construction at a big label buys nothing.
       // Recorded as null, never as a fake zero-cost cell.
       val noPrebuild = sys.env.get("SPARK_GRAFT_SCALE_NOPREBUILD").contains("1")
-      val (preSec, preM) =
-        if (noPrebuild) (0.0, Array.fill(6)(0L))
-        else timedWithMetrics(
+      val (_, preSec, preM) =
+        if (noPrebuild) ((), 0.0, Array.fill(6)(0L))
+        else tap.measure(spark.sparkContext)(
           graft.queries.DedupQueries.prebuildStores(spark, dir))
-      val preJson = if (noPrebuild) "null" else mJson(preSec, preM)
+      val preJson = if (noPrebuild) "null" else cellJson(preSec, preM)
       System.err.println(
         if (noPrebuild) s"[scale] $label prebuild SKIPPED (SPARK_GRAFT_SCALE_NOPREBUILD)"
         else f"[scale] $label prebuild ${preSec}%.1f s")
@@ -143,12 +121,11 @@ object ScaleRun {
           System.err.println(s"[scale] $label $name SKIPPED (SPARK_GRAFT_SCALE_SKIP)")
           s""""$name":{"skipped":true}"""
         } else {
-          val (sec, m) = timedWithMetrics {
-            graft.SparkEntry.queries(name)(spark, dir).count(); ()
-          }
+          val (_, sec, m) = tap.measure(spark.sparkContext)(
+            graft.SparkEntry.queries(name)(spark, dir).count())
           System.err.println(f"[scale] $label $name%-24s ${sec}%8.2f s  " +
             f"shuffle ${(m(0) + m(1)) / 1e6}%.0f MB  spill ${(m(2) + m(3)) / 1e6}%.0f MB")
-          s""""$name":${mJson(sec, m)}"""
+          s""""$name":${cellJson(sec, m)}"""
         }
       }
       // Skew-cure contrast block (round 14, VERDICT item 1): the NAIVE
@@ -198,12 +175,12 @@ object ScaleRun {
           }
           org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
           straggler.reset()
-          val (sec, m) = withConf(extraConf: _*)(timedWithMetrics(f))
+          val (_, sec, m) = withConf(extraConf: _*)(tap.measure(spark.sparkContext)(f))
           val (n, p50, mx) = straggler.stats()
           System.err.println(f"[scale] $label skew $name%-24s ${sec}%8.2f s  " +
             f"tasks $n  p50 ${p50}%d ms  max ${mx}%d ms  " +
             f"shuffle ${(m(0) + m(1)) / 1e6}%.0f MB")
-          s""""$name":${mJson(sec, m).dropRight(1)},"tasks":$n,""" +
+          s""""$name":${cellJson(sec, m).dropRight(1)},"tasks":$n,""" +
             s""""task_p50_ms":$p50,"task_max_ms":$mx}"""
         }
         val li = graft.model.Tables.load(spark, dir, "lineitem")
@@ -332,13 +309,12 @@ object ScaleRun {
       // so ALSO re-time the recompute form afterwards — the variant vs
       // rerun comparison is warm-vs-warm.
       System.setProperty("graft.u5.checkpoint", "true")
-      val (u5ckSec, u5ckM) = try timedWithMetrics {
-        graft.SparkEntry.queries("u5_incremental_ingest")(spark, dir).count(); ()
-      } finally System.clearProperty("graft.u5.checkpoint")
+      val (_, u5ckSec, u5ckM) = try tap.measure(spark.sparkContext)(
+        graft.SparkEntry.queries("u5_incremental_ingest")(spark, dir).count())
+      finally System.clearProperty("graft.u5.checkpoint")
       System.err.println(f"[scale] $label u5(+checkpoint)          ${u5ckSec}%8.2f s")
-      val (u5reSec, u5reM) = timedWithMetrics {
-        graft.SparkEntry.queries("u5_incremental_ingest")(spark, dir).count(); ()
-      }
+      val (_, u5reSec, u5reM) = tap.measure(spark.sparkContext)(
+        graft.SparkEntry.queries("u5_incremental_ingest")(spark, dir).count())
       System.err.println(f"[scale] $label u5(recompute, warm)      ${u5reSec}%8.2f s")
       // (The ad-hoc scaled-geometry variant blocks that used to run
       // here are gone: the scale-safe c5/d10 configurations are
@@ -359,8 +335,8 @@ object ScaleRun {
       }
       s"""{"label":"$label","dir":"$dir","prebuild":$preJson,""" +
         s""""queries":{${qJsons.mkString(",")}},""" +
-        s""""u5_checkpoint_variant":${mJson(u5ckSec, u5ckM)},""" +
-        s""""u5_recompute_warm":${mJson(u5reSec, u5reM)},""" +
+        s""""u5_checkpoint_variant":${cellJson(u5ckSec, u5ckM)},""" +
+        s""""u5_recompute_warm":${cellJson(u5reSec, u5reM)},""" +
         s""""recall_at_5":{${recalls.mkString(",")}},""" +
         skewContrastJson() + "}"
       }

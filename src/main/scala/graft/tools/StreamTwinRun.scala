@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.graft.TaskMetricsTap.cellJson
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
@@ -61,29 +62,9 @@ object StreamTwinRun {
           "(needs a foldable prefix and at least one post-compaction batch)")
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     val tap = org.apache.spark.graft.MetricsBridge.install(spark.sparkContext)
-    def timed(f: => Unit): (Double, Array[Long]) = {
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      val before = tap.snapshot()
-      val t0 = System.nanoTime()
-      f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      (sec, tap.snapshot().zip(before).map { case (a, b) => a - b })
-    }
-    def mJson(sec: Double, d: Array[Long]): String =
-      f"""{"sec":$sec%.3f,"shuffle_read_b":${d(0)},"shuffle_write_b":${d(1)},""" +
-        f""""spill_mem_b":${d(2)},"spill_disk_b":${d(3)},"gc_ms":${d(4)},""" +
-        f""""cpu_sec":${d(5) / 1e9}%.2f}"""
 
     val work = s"target/streamtwin/$label/$which"
     deleteRecursively(new java.io.File(work))
@@ -121,7 +102,7 @@ object StreamTwinRun {
     }
 
     // build: bootstrap the store from the corpus as batch_id=-1
-    val (bSec, bM) = timed {
+    val (_, bSec, bM) = tap.measure(spark.sparkContext) {
       val store =
         if (which == "d16")
           graft.operators.Dedup.substringGramStore(docs, "text", k = 8)
@@ -139,7 +120,7 @@ object StreamTwinRun {
       // input prep is NOT part of the batch cell (a deployment's
       // upstream producer writes these files)
       batchDf(j).repartition(8).write.mode("append").parquet(inputDir)
-      val (sec, m) = timed {
+      val (_, sec, m) = tap.measure(spark.sparkContext) {
         if (which == "d16")
           graft.streaming.IncrementalSubstringScrub.runOnce(spark, schema,
             inputDir, "doc_id", "text", storeDir, outDir, ckptDir, k = 8)
@@ -162,7 +143,7 @@ object StreamTwinRun {
         // compactStore contract). The fold sweeps the batch_id=-1
         // bootstrap snapshot and batches 0..j-2 into one fresh
         // negative-id snapshot.
-        val (cSec, cM) = timed {
+        val (_, cSec, cM) = tap.measure(spark.sparkContext) {
           if (which == "d16")
             graft.streaming.IncrementalSubstringScrub.compactStore(
               spark, storeDir, uptoBatch = j - 2L)
@@ -185,15 +166,15 @@ object StreamTwinRun {
       case c => c.toString
     } + "\""
     val batchJsons = cells.map { case (sec, m, rows) =>
-      mJson(sec, m).dropRight(1) + s""","out_rows":$rows}"""
+      cellJson(sec, m).dropRight(1) + s""","out_rows":$rows}"""
     }
     val compactJson = (compactCell, compactAfter) match {
       case (Some((cSec, cM)), Some(k)) =>
-        s""","compact":${mJson(cSec, cM).dropRight(1)},"after_batch":$k}"""
+        s""","compact":${cellJson(cSec, cM).dropRight(1)},"after_batch":$k}"""
       case _ => ""
     }
     val out = s"""{"metric":"streamtwin","query":${js(which + "_streaming_twin")},""" +
-      s""""label":${js(label)},"dir":${js(dir)},"build":${mJson(bSec, bM)},""" +
+      s""""label":${js(label)},"dir":${js(dir)},"build":${cellJson(bSec, bM)},""" +
       s""""batches":[${batchJsons.mkString(",")}],""" +
       s""""first":${batchJsons.head},"steady":${batchJsons.last}$compactJson}"""
     println(out)

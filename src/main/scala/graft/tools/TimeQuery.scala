@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time one named query N times in isolation (profiling aid — the
   * cross-query Bench attributes shared memoized tables to whichever
   * query runs first, and ambient machine load swamps run-to-run
@@ -13,28 +11,15 @@ object TimeQuery {
     val name = args(0)
     val n = if (args.length > 1) args(1).toInt else 3
     val d = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    // Same geometry knob as Bench so solo cells compare across core counts.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Same session geometry as Bench so solo cells compare across core counts.
+    val spark = graft.GraftSession.local()
     val fn = graft.SparkEntry.queries(name)
     // Same task-metrics tap as Bench: per-run shuffle/spill/GC/CPU
     // deltas make a wall-clock difference adjudicable (flat metrics +
     // moved wall = contention; moved cpu/shuffle = real change).
     val tap = org.apache.spark.graft.MetricsBridge.install(spark.sparkContext)
     val times = (1 to n).map { _ =>
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      val before = tap.snapshot()
-      val t0 = System.nanoTime()
-      fn(spark, d).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.MetricsBridge.drain(spark.sparkContext)
-      val m = tap.snapshot().zip(before).map { case (a, b) => a - b }
+      val (_, sec, m) = tap.measure(spark.sparkContext)(fn(spark, d).count())
       println(f"RUN $name wall=$sec%.2f shuffle_r=${m(0)} shuffle_w=${m(1)} " +
         f"spill_mem=${m(2)} spill_disk=${m(3)} gc_ms=${m(4)} cpu_sec=${m(5) / 1e9}%.1f")
       sec

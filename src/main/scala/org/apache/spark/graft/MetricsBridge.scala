@@ -11,9 +11,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * can — identical shuffle volume with inflated wall time is
   * contention; grown shuffle volume is a regression.
   *
-  * Counters are cumulative across the app; callers snapshot before and
-  * after a query and diff. Listener delivery is asynchronous, so
-  * callers must [[MetricsBridge.drain]] before each snapshot.
+  * Counters are cumulative across the app; callers [[measure]] a block,
+  * which diffs two snapshots. Listener delivery is asynchronous, so a
+  * caller that snapshots by hand must [[MetricsBridge.drain]] first.
   */
 class TaskMetricsTap extends SparkListener {
   val shuffleReadBytes = new AtomicLong
@@ -39,6 +39,27 @@ class TaskMetricsTap extends SparkListener {
   def snapshot(): Array[Long] = Array(
     shuffleReadBytes.get, shuffleWriteBytes.get,
     memorySpillBytes.get, diskSpillBytes.get, gcTimeMs.get, cpuTimeNs.get)
+
+  /** Run `f` between two drained snapshots of `sc`'s bus: (result, wall
+    * seconds of `f`, counter deltas in [[snapshot]] order). */
+  def measure[T](sc: SparkContext)(f: => T): (T, Double, Array[Long]) = {
+    MetricsBridge.drain(sc)
+    val before = snapshot()
+    val t0 = System.nanoTime()
+    val r = f
+    val sec = (System.nanoTime() - t0) / 1e9
+    MetricsBridge.drain(sc)
+    (r, sec, snapshot().zip(before).map { case (a, b) => a - b })
+  }
+}
+
+object TaskMetricsTap {
+  /** One measured cell as the scale/capstone/stream-twin records carry
+    * it; the Python checkers under tools/ parse these keys. */
+  def cellJson(sec: Double, d: Array[Long]): String =
+    f"""{"sec":$sec%.3f,"shuffle_read_b":${d(0)},"shuffle_write_b":${d(1)},""" +
+      f""""spill_mem_b":${d(2)},"spill_disk_b":${d(3)},"gc_ms":${d(4)},""" +
+      f""""cpu_sec":${d(5) / 1e9}%.2f}"""
 }
 
 /** Per-task duration capture for straggler attribution (the skew-cure

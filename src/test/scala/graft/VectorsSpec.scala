@@ -248,7 +248,7 @@ class VectorsSpec extends SparkSpec {
         |UNION ALL SELECT transform(sequence(1, 64), i -> CAST('NaN' AS FLOAT))""".stripMargin)
     val bad = e.select($"embedding").unionByName(edges).select(
         graft.plans.VecExprs.pqReconSqErr($"embedding", codebook).as("nat"),
-        graft.streaming.IncrementalAnn.reconSqErrDeclarative("embedding", codebook).as("dec"))
+        graft.streaming.IncrementalAnnTwin.reconSqErrDeclarative("embedding", codebook).as("dec"))
       .filter(!($"nat" <=> $"dec")).count()
     assert(bad == 0, "recon-sqerr kernel diverges from the declarative chain")
   }
