@@ -175,14 +175,13 @@ object Tables {
     df.withColumn("ts", epochMicros(df, "ts"))
   }
 
-  /** Fan a small single-file scan out across the session's parallelism —
-    * the testdata tables are one parquet row-group each, so a scan feeds
+  /** Fan a scan out across the session's parallelism: always a
+    * round-robin repartition to `spark.sql.shuffle.partitions`. The
+    * testdata tables are one parquet row-group each, so a scan feeds
     * ONE task regardless of maxPartitionBytes; compute-heavy per-row
-    * operators (minhash, simhash, vector math — interpreted
-    * higher-order-function lambdas) would otherwise run single-threaded.
-    * On a real multi-file 100 TB table this is a no-op decision: the
-    * scan already yields thousands of splits and the repartition should
-    * be skipped. */
+    * operators (minhash, simhash, vector math) would otherwise run
+    * single-threaded. A scan that already yields many splits pays the
+    * same full shuffle anyway — nothing here checks the split count. */
   def spread(df: DataFrame): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     df.repartition(n)

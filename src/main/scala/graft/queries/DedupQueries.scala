@@ -608,17 +608,11 @@ object DedupQueries {
       // the scrub result feeds two subtrees (signature pass + final
       // join); recomputing the light batch-sized chain beats an eager
       // materialization here (measured at 1x/10x/100x — SCALE.md
-      // "u5 recompute vs checkpoint"; ScaleRun re-times both variants
-      // every scale run via -Dgraft.u5.checkpoint=true), and the
-      // streaming twin persists instead where the batch recurs across
-      // sinks
-      val survivorsPlan = Dedup.incrementalSpanDedup(batch, store, "doc_id", "text", 16)
+      // "u5 recompute vs checkpoint"), and the streaming twin persists
+      // instead where the batch recurs across sinks
+      val survivors = Dedup.incrementalSpanDedup(batch, store, "doc_id", "text", 16)
         .filter(col("n_spans_kept") > 0)
         .select(col("doc_id"), col("n_spans_kept"), col("clean_text"))
-      val survivors =
-        if (sys.props.get("graft.u5.checkpoint").contains("true"))
-          graft.operators.Materialize.once(survivorsPlan)
-        else survivorsPlan
       // uniqueIds: the store side is the shared write-once signature
       // frame (one row per doc by construction) — the mid-compaction
       // duplicate shield is for unmanaged directory piles

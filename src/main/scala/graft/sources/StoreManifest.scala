@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Atomic-visibility layout for the incremental `batch_id=` stores.
   *
@@ -64,14 +65,9 @@ object StoreManifest {
       Some(name.drop(1).toLong)
     else None
 
-  /** Newest committed (version, listed dir names), or None when the
-    * store is unmanaged (no `_manifest/` with a committed version). */
-  def latest(spark: SparkSession, storeDir: String): Option[(Long, Seq[String])] =
-    resolve(spark, storeDir).map(m => m.version -> m.dirs)
-
-  /** [[latest]] plus the duplicate-possible horizon — for callers that
-    * gate a dedup-shield opt-out on the listing being duplicate-free,
-    * not merely atomic. */
+  /** The newest committed version (its listed dir names and duplicate-
+    * possible horizon), or None when the store is unmanaged (no
+    * `_manifest/` with a committed version). */
   def resolve(spark: SparkSession, storeDir: String): Option[Manifest] = {
     val (fs, root) = fsOf(spark, storeDir)
     val mdir = new Path(root, Dir)
@@ -91,9 +87,6 @@ object StoreManifest {
     Some(Manifest(v, dirs, dupes))
   }
 
-  def isManaged(spark: SparkSession, storeDir: String): Boolean =
-    latest(spark, storeDir).isDefined
-
   /** Commit `entries` as the next version: write to a `.tmp` name,
     * then atomic rename to the committed `v<N>` name. Returns the
     * committed version. */
@@ -104,7 +97,7 @@ object StoreManifest {
     val (fs, root) = fsOf(spark, storeDir)
     val mdir = new Path(root, Dir)
     fs.mkdirs(mdir)
-    val v = latest(spark, storeDir).map(_._1 + 1).getOrElse(0L)
+    val v = resolve(spark, storeDir).map(_.version + 1).getOrElse(0L)
     val tmp = new Path(mdir, f".tmp-v$v%020d-${System.nanoTime()}")
     val body = dupesUpto.map(m => s"$DupesFlagPrefix$m").toSeq ++ entries
     val out = fs.create(tmp, true)
@@ -125,27 +118,7 @@ object StoreManifest {
 
   private def idOf(name: String): Long = name.stripPrefix("batch_id=").toLong
 
-  /** The names a legacy (pre-manifest) pile holds — its `batch_id=`
-    * children — for first-contact migration, with the interrupted-
-    * legacy-compaction states resolved rather than baked in:
-    *
-    *  - a COMPLETE snapshot (negative id, `_SUCCESS` present) at
-    *    `-(u+1)` supersedes every dir with id <= u — those are the
-    *    folded inputs a crash between snapshot-write and delete left
-    *    behind. Listing both would make the manifest itself carry each
-    *    folded row twice, permanently, while `isManaged` simultaneously
-    *    tells consumers to drop their duplicate shields.
-    *  - an INCOMPLETE snapshot (no `_SUCCESS`) is the crashed write
-    *    itself: never readable as truth, excluded; its folded inputs
-    *    (still intact) carry the data.
-    *
-    * Positive-id dirs are listed regardless of `_SUCCESS`: a crashed
-    * batch write is replayed and overwritten by the at-least-once
-    * stream, which is the healing path the layout already relies on. */
-  private def legacyDirs(fs: FileSystem, root: Path): Seq[String] =
-    legacyResolve(fs, root)._1
-
-  /** [[legacyDirs]] plus the duplicate-possible horizon the resolved
+  /** [[legacyNames]] plus the duplicate-possible horizon the resolved
     * listing inherits. The horizon exists because one legacy state is
     * ambiguous: a snapshot at exactly `batch_id=-1` is EITHER the
     * current naming's first fold (horizon 0 — folded only batch 0) OR
@@ -221,42 +194,34 @@ object StoreManifest {
     ()
   }
 
-  /** Read the live directories of a MANAGED store as one DataFrame
-    * (with the `batch_id` partition column preserved via basePath), or
-    * None when the store is unmanaged — callers fall back to their
-    * legacy root scan. An empty live set yields None as well: callers
-    * already construct the correctly-typed empty frame. */
-  def readLive(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    latest(spark, storeDir).collect {
-      case (_, dirs) if dirs.nonEmpty => readDirs(spark, storeDir, dirs)
-    }
-
-  /** Read an already-resolved live set (one [[latest]] call's `dirs`)
-    * — lets a caller that resolved the manifest for its own logic read
-    * the same version without a second manifest round-trip (each
-    * [[latest]] is a listStatus + open on `_manifest`: driver-side
-    * metadata I/O on the hot per-batch path of an object-store
-    * deployment). */
-  def readDirs(spark: SparkSession, storeDir: String,
-               dirs: Seq[String]): DataFrame =
-    spark.read.option("basePath", storeDir)
+  /** Read resolved batch directories (one [[resolve]] call's `dirs`)
+    * as one DataFrame, the `batch_id` partition column preserved via
+    * basePath. With a declared `schema` the files are read under it, so
+    * columns older files lack null-fill; without one it is inferred. */
+  def readDirs(spark: SparkSession, storeDir: String, dirs: Seq[String],
+               schema: Option[StructType] = None): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_)).option("basePath", storeDir)
       .parquet(dirs.map(n => s"$storeDir/$n"): _*)
 
-  /** True when the store resolves to NO live data: unmanaged and no
-    * legacy dirs, or managed with an empty live set. */
-  def resolvesEmpty(spark: SparkSession, storeDir: String): Boolean = {
-    latest(spark, storeDir) match {
-      case Some((_, dirs)) => dirs.isEmpty
-      case None => legacyNames(spark, storeDir).isEmpty
-    }
-  }
-
-  /** The resolved names of an UNMANAGED pile (the manifest-migration
-    * view: interrupted-compaction leftovers excluded) — for callers
-    * that already know `latest` returned None and must not pay a
-    * second manifest resolve. */
+  /** The names a legacy (pre-manifest) pile holds — its `batch_id=`
+    * children — for first-contact migration, with the interrupted-
+    * legacy-compaction states resolved rather than baked in:
+    *
+    *  - a COMPLETE snapshot (negative id, `_SUCCESS` present) at
+    *    `-(u+1)` supersedes every dir with id <= u — those are the
+    *    folded inputs a crash between snapshot-write and delete left
+    *    behind. Listing both would make the manifest itself carry each
+    *    folded row twice, permanently, while the clean resolve
+    *    simultaneously tells consumers to drop their duplicate shields.
+    *  - an INCOMPLETE snapshot (no `_SUCCESS`) is the crashed write
+    *    itself: never readable as truth, excluded; its folded inputs
+    *    (still intact) carry the data.
+    *
+    * Positive-id dirs are listed regardless of `_SUCCESS`: a crashed
+    * batch write is replayed and overwritten by the at-least-once
+    * stream, which is the healing path the layout already relies on. */
   def legacyNames(spark: SparkSession, storeDir: String): Seq[String] = {
     val (fs, root) = fsOf(spark, storeDir)
-    legacyDirs(fs, root)
+    legacyResolve(fs, root)._1
   }
 }

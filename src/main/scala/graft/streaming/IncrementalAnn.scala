@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.functions.Vectors
 import graft.operators.SimilaritySearch
@@ -30,10 +29,10 @@ import graft.operators.SimilaritySearch
   * coarse LSH blocking (computed from the raw vector, codebook-free)
   * must agree across generations, and it does by construction.
   *
-  * Idempotence follows the sibling's layout: both sinks write
-  * `batch_id=<n>` overwrite partitions, and a codebook generation is
-  * only trusted once its `_SUCCESS` marker exists — a generation half-
-  * written by a crashed retrain is ignored on replay and deterministically
+  * Runs on [[MicroBatch]] over a [[StoreCompaction]] code store. The
+  * codebook sidecar has its own replay rule: a generation is only
+  * trusted once its `_SUCCESS` marker exists — a generation half-written
+  * by a crashed retrain is ignored on replay and deterministically
   * rewritten by the same drift decision (StreamingSpec drives both).
   */
 object IncrementalAnn {
@@ -62,10 +61,8 @@ object IncrementalAnn {
       lshBits, lshTables, refineBits)
     adoptStoreLayout(spark, codeStoreDir, lshBits, lshTables, refineBits,
       unverified = !verified)
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-      .select(col(idCol), col(vecCol))
-    val q = in.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, schema, inputDir, idCol, vecCol, checkpointDir) {
+      (batch, batchId) =>
         val s = batch.sparkSession
         val cbDir = s"$codeStoreDir/_codebook"
         val known = loadCodebooks(s, cbDir)
@@ -105,20 +102,15 @@ object IncrementalAnn {
             col("code"), col("code"), books(gen), books(gen))))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val existing = IncrementalDedup.readStore(
-            s, codeStoreDir, newCodes.schema, glob = "/batch_id=*")
+          val existing = StoreCompaction.read(
+            s, codeStoreDir, newCodes.schema, ltBatch = batchId).rows
           pairsFromCodes(newCodes, existing, books, minCosine, maxBucket, refineBits)
             .write.mode("overwrite").parquet(s"$pairsOutDir/batch_id=$batchId")
           // append AFTER pairing (the batch must not meet itself twice)
-          newCodes.write.mode("overwrite")
-            .parquet(s"$codeStoreDir/batch_id=$batchId")
+          StoreCompaction.commit(newCodes, codeStoreDir, batchId)
         } finally newCodes.unpersist()
         ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Batch twin of one [[runOnce]] micro-batch against a store whose
@@ -197,14 +189,7 @@ object IncrementalAnn {
           "recomputable) and must stay constant for the store's lifetime")
       return true
     }
-    val paths = graft.sources.StoreManifest.latest(spark, codeStoreDir) match {
-      case Some((_, dirs)) => dirs.map(n => s"$codeStoreDir/$n")
-      case None =>
-        if (!fs.exists(root)) Seq.empty
-        else fs.listStatus(root).map(_.getPath.getName)
-          .filter(_.startsWith("batch_id=")).toSeq
-          .map(n => s"$codeStoreDir/$n")
-    }
+    val paths = StoreCompaction.liveDirs(spark, codeStoreDir)
     if (paths.nonEmpty) {
       val stored = spark.read.parquet(paths: _*).schema.fieldNames
         .contains("xbuckets")

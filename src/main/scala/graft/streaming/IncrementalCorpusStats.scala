@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Continuous corpus statistics: each micro-batch APPENDS its partial
@@ -23,9 +22,12 @@ import org.apache.spark.sql.types.StructType
   * aggregate store converges to; small-files pressure is the
   * documented `Layout.compact` chore.
   *
-  * Idempotence: a replayed micro-batch (foreachBatch is
-  * at-least-once) overwrites its own `batch_id=` partition instead of
-  * double-counting — same discipline as the dedup/ANN stores.
+  * Runs on [[MicroBatch]]: a replayed micro-batch overwrites its own
+  * `batch_id=` partition instead of double-counting. The store keeps
+  * its own layout rather than [[StoreCompaction]]'s: [[compactTo]]
+  * writes out of place, and its reserved `batch_id=-1` base means
+  * "folded through the `_compacted_upto` horizon", which the
+  * manifest's legacy migration would misread.
   */
 object IncrementalCorpusStats {
 
@@ -33,20 +35,12 @@ object IncrementalCorpusStats {
     * stop. Call repeatedly for a scheduled-cadence pipeline. */
   def runOnce(spark: SparkSession, schema: StructType, inputDir: String,
               idCol: String, textCol: String,
-              storeDir: String, checkpointDir: String): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-      .select(col(idCol), col(textCol))
-    val q = in.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+              storeDir: String, checkpointDir: String): Unit =
+    MicroBatch.run(spark, schema, inputDir, idCol, textCol, checkpointDir) {
+      (batch, batchId) =>
         batchPartial(batch, idCol, textCol)
           .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** One batch's partial aggregates: (token, tf = occurrences in the
     * batch, df = docs of the batch containing it). Map-side combined

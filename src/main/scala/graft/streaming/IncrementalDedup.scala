@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.operators.Dedup
 
 /** Continuous near-duplicate detection: each micro-batch of documents
@@ -11,11 +10,8 @@ import graft.operators.Dedup
   * batches (`Dedup.incrementalPairsFromSigs`), the surviving pairs are
   * appended, and the batch's own signatures join the store — so a
   * perpetual ingest pays O(batch + collisions) per batch and the
-  * corpus is never re-tokenized. The streaming twin of query d7.
-  *
-  * Idempotence: both sinks write into a `batch_id=<n>` subdirectory
-  * with overwrite, so a replayed micro-batch (foreachBatch is
-  * at-least-once) lands in the same place instead of duplicating rows.
+  * corpus is never re-tokenized. The streaming twin of query d7; runs
+  * on [[MicroBatch]] over [[StoreCompaction]] stores.
   *
   * Store size: with `verifyBySig = false` (exact-Jaccard verification)
   * the store carries the distinct shingle-hash array (`sh`) per doc —
@@ -36,11 +32,9 @@ object IncrementalDedup {
               sigStoreDir: String, pairsOutDir: String, checkpointDir: String,
               shingleK: Int = 3, numHashes: Int = 16, bands: Int = 4,
               minJaccard100: Int = 50, verifyBySig: Boolean = false,
-              labelsStoreDir: Option[String] = None): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-      .select(col(idCol), col(textCol))
-    val q = in.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+              labelsStoreDir: Option[String] = None): Unit =
+    MicroBatch.run(spark, schema, inputDir, idCol, textCol, checkpointDir) {
+      (batch, batchId) =>
         val s = batch.sparkSession
         val fullSigs = Dedup.minhashSignatures(
             batch, idCol, textCol, shingleK, numHashes, bands)
@@ -50,198 +44,91 @@ object IncrementalDedup {
                        else fullSigs)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // ONE manifest resolve serves both the store read and the
-          // uniqueIds decision (a separate isManaged call would re-pay
-          // the driver-side metadata round-trip every micro-batch)
-          val (existing, unique) = StoreCompaction.readResolvedManaged(
+          val existing = StoreCompaction.read(
             s, sigStoreDir, newSigs.schema, ltBatch = batchId)
-          // uniqueIds: a duplicate-free manifest resolve lists each
-          // batch directory exactly once, and replays overwrite their
-          // own batch dir — so an id appears once UNLESS the upstream
+          // uniqueIds: a duplicate-free resolve lists each batch
+          // directory exactly once, and replays overwrite their own
+          // batch dir — so an id appears once UNLESS the upstream
           // source itself emits the same id in two distinct batches (an
           // input-data contract, same as the batch API's). The verify-
           // side dropDuplicates shield (an extra exchange of wide
-          // sig/sh rows) is skipped on that basis. `unique` is false —
-          // shield stays on — for unmanaged piles AND for a manifest
-          // that migrated the ambiguous interrupted-RESERVED-compaction
-          // legacy state (StoreManifest.Manifest.dupesUpto), until a
-          // full-range compactSigs rewrites the suspect directories
+          // sig/sh rows) is skipped on that basis; it stays on for
+          // unmanaged piles and flagged legacy migrations
           val pairs =
             if (verifyBySig)
               Dedup.incrementalPairsBySig(
-                newSigs, existing, idCol, numHashes, bands, minJaccard100,
-                uniqueIds = unique)
+                newSigs, existing.rows, idCol, numHashes, bands, minJaccard100,
+                uniqueIds = existing.duplicateFree)
             else
               Dedup.incrementalPairsFromSigs(
-                newSigs, existing, idCol, bands, minJaccard100,
-                uniqueIds = unique)
+                newSigs, existing.rows, idCol, bands, minJaccard100,
+                uniqueIds = existing.duplicateFree)
           pairs.write.mode("overwrite").parquet(s"$pairsOutDir/batch_id=$batchId")
           // append AFTER pairing: the batch must not see its own sigs
           // on the existing side (pairs would double via both orders)
-          newSigs.write.mode("overwrite")
-            .parquet(s"$sigStoreDir/batch_id=$batchId")
-          graft.sources.StoreManifest.commitBatch(s, sigStoreDir,
-            s"batch_id=$batchId")
+          StoreCompaction.commit(newSigs, sigStoreDir, batchId)
           // continuous cluster maintenance: fold this batch's pairs into
           // the labeling as a per-batch DELTA (changed + new rows only —
-          // O(merged components), never O(corpus)); replays overwrite
-          // their own batch_id partition and read only older ones, so
-          // at-least-once delivery stays idempotent
+          // O(merged components), never O(corpus))
           labelsStoreDir.foreach { labelsDir =>
             val batchPairs = s.read
               .parquet(s"$pairsOutDir/batch_id=$batchId")
             val current = resolveLabels(s, labelsDir, ltBatch = batchId,
               idLike = batchPairs.select(col("id_a")))
-            graft.operators.Components.mergeIncrementalClustersDelta(
-                current, batchPairs, "id_a", "id_b")
-              .write.mode("overwrite").parquet(s"$labelsDir/batch_id=$batchId")
-            graft.sources.StoreManifest.commitBatch(s, labelsDir,
-              s"batch_id=$batchId")
+            StoreCompaction.commit(
+              graft.operators.Components.mergeIncrementalClustersDelta(
+                current, batchPairs, "id_a", "id_b"),
+              labelsDir, batchId)
           }
         } finally newSigs.unpersist()
         ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** The labeling as of just before `ltBatch`: base + deltas resolved
     * latest-batch-wins per node ([[graft.operators.Components
     * .resolveLabels]] — the oldest partition is the base and never
     * shuffles; only the small deltas enter the recency window).
-    * `idLike` supplies the node id type for the empty frame before any
-    * delta exists. */
+    * `idLike` supplies the node id type. */
   def resolveLabels(spark: SparkSession, labelsDir: String, ltBatch: Long,
                     idLike: DataFrame): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(labelsDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def empty = idLike.select(col(idLike.columns.head).as("node"),
-      col(idLike.columns.head).as("cluster")).limit(0)
-    if (!fs.exists(path)) return empty
-    // manifest-resolved when managed (atomic across compactions — see
-    // StoreManifest); legacy piles root-scan as before
-    val managed = graft.sources.StoreManifest.latest(spark, labelsDir)
-    val parts = managed.map(_._2.map(_.stripPrefix("batch_id=").toLong))
-      .getOrElse(fs.listStatus(path).map(_.getPath.getName)
-        .filter(_.startsWith("batch_id="))
-        .map(_.stripPrefix("batch_id=").toLong).toSeq)
-      .filter(_ < ltBatch)
-    if (parts.isEmpty) return empty
-    // ONE manifest resolve per call: readDirs over the names the
-    // resolve above already returned — readLive would re-pay the
-    // _manifest listStatus+open on this hot per-micro-batch path
-    // (the readResolvedManaged rule)
-    val all = (managed match {
-        case Some((_, dirs)) =>
-          graft.sources.StoreManifest.readDirs(spark, labelsDir, dirs)
-        case None => spark.read.parquet(labelsDir) // batch_id partition column
-      })
-      .filter(col("batch_id") < ltBatch)
+    val idType = idLike.schema.head.dataType
+    val labels = StoreCompaction.read(spark, labelsDir,
+      new StructType().add("node", idType).add("cluster", idType)
+        .add("batch_id", LongType), ltBatch)
+    if (labels.batchIds.isEmpty) return labels.rows.drop("batch_id")
+    val base = labels.batchIds.min
     graft.operators.Components.resolveLabels(
-      all.filter(col("batch_id") === parts.min),
-      all.filter(col("batch_id") > parts.min))
+      labels.rows.filter(col("batch_id") === base),
+      labels.rows.filter(col("batch_id") > base))
   }
 
   /** Label-store compaction — the maintenance chore that keeps
     * [[resolveLabels]] linear as batches accumulate (without it, each
     * resolution re-reads base + every delta, so per-batch read cost
     * grows with batch count). Rewrites the labeling resolved through
-    * `uptoBatch` as ONE full snapshot at a fresh negative id
-    * (`min(-(uptoBatch+1), min(resolved ids)-1)` — fresh even when a
-    * fold is retried at an already-folded horizon) and retires the
-    * folded partitions; latest-wins
-    * resolution is unchanged because the snapshot's id sorts BELOW
-    * every live delta — it becomes [[resolveLabels]]'s base, and
-    * surviving deltas (> uptoBatch) override per node exactly as they
-    * overrode the partitions the snapshot folded. The manifest swap
-    * publishes the new layout atomically, so a concurrent reader
-    * resolves old-or-new, never a mix. Run it between [[runOnce]]
-    * invocations on whatever cadence read amplification warrants.
+    * `uptoBatch` as ONE full snapshot ([[StoreCompaction.fold]]);
+    * latest-wins resolution is unchanged because the snapshot's id
+    * sorts BELOW every live delta — it becomes [[resolveLabels]]'s
+    * base, and surviving deltas (> uptoBatch) override per node exactly
+    * as they overrode the partitions the snapshot folded.
     *
-    * The NEWEST delta may itself still replay (foreachBatch is
-    * at-least-once: a crash after the delta write but before the
-    * checkpoint commit re-runs the batch). Folding it would be ruinous,
-    * not just stale: the replay resolves labels from partitions
-    * strictly OLDER than its own id, so it would miss the folded
-    * snapshot, recompute the delta against an empty labeling, and
-    * commit that — losing every folded label. Hence the same guard as
-    * the span store: refuse unless a strictly newer committed
-    * partition proves `uptoBatch` can no longer replay. */
+    * The NEWEST delta may itself still replay. Folding it would be
+    * ruinous, not just stale: the replay resolves labels from
+    * partitions strictly OLDER than its own id, so it would miss the
+    * folded snapshot, recompute the delta against an empty labeling,
+    * and commit that — losing every folded label. The fold refuses. */
   def compactLabels(spark: SparkSession, labelsDir: String,
-                    uptoBatch: Long): Unit = {
-    val path = new org.apache.hadoop.fs.Path(labelsDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return
-    val managed = graft.sources.StoreManifest.latest(spark, labelsDir)
-    val names = managed.map(_._2).getOrElse(
-      fs.listStatus(path).map(_.getPath.getName)
-        .filter(_.startsWith("batch_id=")).toSeq)
-    def idOf(n: String) = n.stripPrefix("batch_id=").toLong
-    require(names.map(idOf).exists(_ > uptoBatch),
-      s"refusing to compact labels through batch $uptoBatch: it is the " +
-        "newest batch and may still be replayed — compact only after a " +
-        "newer batch has committed")
-    val foldNames = names.filter(n => idOf(n) <= uptoBatch)
-    if (foldNames.isEmpty) return // nothing below the horizon: no-op
-    val idLike = (managed match {
-      case Some((_, dirs)) =>
-        graft.sources.StoreManifest.readDirs(spark, labelsDir, dirs)
-      case None => spark.read.parquet(labelsDir)
-    }).select(col("node"))
-    val snapshot = resolveLabels(spark, labelsDir, ltBatch = uptoBatch + 1,
-      idLike = idLike)
-    // fresh against EVERY resolved name, not just increasing horizons:
-    // a retried fold at an already-folded horizon must never target its
-    // own listed input (see [[StoreCompaction.fold]] — same rule)
-    val snapId = math.min(-(uptoBatch + 1), names.map(idOf).min - 1)
-    val snapName = s"batch_id=$snapId"
-    snapshot.write.mode("overwrite").parquet(s"$labelsDir/$snapName")
-    graft.sources.StoreManifest.replace(spark, labelsDir,
-      foldNames.toSet, Seq(snapName))
-    foldNames.foreach(n =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, n), true))
-  }
-
-  /** The accumulated store (optionally narrowed to a sub-glob, e.g.
-    * `/batch_id=*` to skip sidecar dirs), or an empty frame with the
-    * right schema before the first batch lands. Shared by the dedup
-    * and ANN streaming stores. */
-  private[streaming] def readStore(spark: SparkSession, dir: String,
-                                   schema: StructType,
-                                   glob: String = ""): DataFrame = {
-    graft.sources.StoreManifest.latest(spark, dir) match {
-      case Some((_, dirs)) =>
-        if (dirs.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else
-          spark.read.schema(schema).parquet(dirs.map(n => s"$dir/$n"): _*)
-      case None =>
-        val path = new org.apache.hadoop.fs.Path(dir)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val nonEmpty = fs.exists(path) &&
-          (glob.isEmpty ||
-            fs.listStatus(path).exists(_.getPath.getName.startsWith("batch_id=")))
-        if (nonEmpty)
-          spark.read.schema(schema).parquet(dir + glob)
-        else
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+                    uptoBatch: Long): Unit =
+    StoreCompaction.fold(spark, labelsDir, uptoBatch) { (folded, _) =>
+      resolveLabels(spark, labelsDir, ltBatch = uptoBatch + 1,
+        idLike = folded.select(col("node")))
     }
-  }
 
-  /** Signature-store compaction: fold the `batch_id=` pile through
-    * `uptoBatch` into a fresh negative-id snapshot and drop the folded
-    * partitions — the [[IncrementalSubstringScrub.compactStore]] shape
-    * ([[StoreCompaction.fold]]). Partitions are disjoint by id on a
-    * clean history; the legacy-path `dropDuplicates` absorbs the crash
-    * window where a prior interrupted compaction left rows in both the
-    * base and a folded partition (impossible through a manifest
-    * resolve). The NEWEST batch (the only one structured streaming can
-    * still replay) must never fold. */
+  /** Signature-store compaction ([[StoreCompaction.fold]]). Partitions
+    * are disjoint by id on a clean history; the by-id dedup absorbs the
+    * duplicates of a resolve that is not duplicate-free. */
   def compactSigs(spark: SparkSession, sigStoreDir: String,
                   uptoBatch: Long): Unit =
-    StoreCompaction.fold(spark, sigStoreDir, uptoBatch,
-      df => df.dropDuplicates(df.columns.head))
+    StoreCompaction.fold(spark, sigStoreDir, uptoBatch)(
+      StoreCompaction.concat(df => df.dropDuplicates(df.columns.head)))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructType}
 import graft.operators.Dedup
 
@@ -13,21 +12,12 @@ import graft.operators.Dedup
   * tokenizes only its own batch and probes a membership set that holds
   * ONE 16-byte-hash row per distinct span ever seen (no text, no
   * positions: the minimal state the scrub semantics need). The
-  * streaming twin of query d13.
+  * streaming twin of query d13; runs on [[MicroBatch]] over a
+  * [[StoreCompaction]] store.
   *
-  * Idempotence: both sinks write into a `batch_id=<n>` subdirectory
-  * with overwrite, so a replayed micro-batch (foreachBatch is
-  * at-least-once) lands in the same place instead of double-appending
-  * store hashes — and because a replay reads the store WITHOUT its own
-  * partition's prior attempt (strictly lower batch ids), the scrub
-  * result is bit-identical across attempts.
-  *
-  * Store growth is monotone append-only; fold the `batch_id=`
-  * partition pile into one base with the same snapshot+compact shape
-  * as [[IncrementalDedup.compactLabels]] when read amplification
-  * warrants (dedup of the pile is free — partitions are disjoint by
-  * construction since each batch appends only hashes the store
-  * lacked).
+  * Store growth is monotone append-only; partitions are disjoint by
+  * construction (each batch appends only hashes the store lacked), so
+  * [[compactStore]] is a plain concatenation fold.
   */
 object IncrementalSpanDedup {
 
@@ -36,13 +26,10 @@ object IncrementalSpanDedup {
   def runOnce(spark: SparkSession, schema: StructType, inputDir: String,
               idCol: String, textCol: String,
               storeDir: String, cleanOutDir: String, checkpointDir: String,
-              spanTokens: Int = 16): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-      .select(col(idCol), col(textCol))
-    val q = in.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val store = readStore(s, storeDir, ltBatch = batchId)
+              spanTokens: Int = 16): Unit =
+    MicroBatch.run(spark, schema, inputDir, idCol, textCol, checkpointDir) {
+      (batch, batchId) =>
+        val store = readStore(batch.sparkSession, storeDir, ltBatch = batchId)
         // ONE winners pass feeds both the scrub and the store delta
         val fresh = Dedup.freshSpanWinners(batch, store, idCol, textCol, spanTokens)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -50,44 +37,23 @@ object IncrementalSpanDedup {
           Dedup.reassembleSpans(batch, fresh, idCol, textCol, spanTokens)
             .write.mode("overwrite").parquet(s"$cleanOutDir/batch_id=$batchId")
           // append AFTER scrubbing: the batch must not see its own
-          // spans on the store side (everything would scrub to "");
-          // the manifest commit makes the new partition visible
-          // atomically (idempotent across replays)
-          fresh.select(col("span_md5"))
-            .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
-          graft.sources.StoreManifest.commitBatch(s, storeDir, s"batch_id=$batchId")
+          // spans on the store side (everything would scrub to "")
+          StoreCompaction.commit(fresh.select(col("span_md5")), storeDir, batchId)
         } finally fresh.unpersist()
         ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
-  /** Fold the `batch_id=` partition pile through `uptoBatch` into a
-    * fresh negative-id snapshot and drop the folded partitions — the
-    * read-amplification chore ([[readStore]] otherwise opens every
-    * batch's files forever). Store partitions are disjoint by
-    * construction (each batch appends only hashes the store lacked),
-    * so the fold is a plain concatenation with the existing base.
-    * Mechanics (snapshot naming, manifest swap, replay guard, legacy
-    * duplicate absorber) are shared — see [[StoreCompaction.fold]]:
-    * the snapshot id is negative so it can never alias a partition a
-    * structured-streaming replay still owns (at-least-once delivery
-    * would otherwise overwrite the folded history and destroy the
-    * membership set). */
+  /** Fold the `batch_id=` pile through `uptoBatch` into one snapshot
+    * ([[StoreCompaction.fold]]) — the read-amplification chore
+    * ([[readStore]] otherwise opens every batch's files forever); the
+    * newest batch never folds. */
   def compactStore(spark: SparkSession, storeDir: String,
                    uptoBatch: Long): Unit =
-    StoreCompaction.fold(spark, storeDir, uptoBatch, _.distinct())
+    StoreCompaction.fold(spark, storeDir, uptoBatch)(StoreCompaction.concat(_.distinct()))
 
-  /** The span-hash membership set as of just before `ltBatch` (replay
-    * safety: a batch's own earlier attempt is excluded). Resolved
-    * through the store manifest when one exists (atomic old-or-new
-    * visibility across compactions); legacy piles root-scan. */
+  /** The span-hash membership set as of just before `ltBatch`. */
   def readStore(spark: SparkSession, storeDir: String,
                 ltBatch: Long): DataFrame =
-    StoreCompaction.readResolved(spark, storeDir,
-        new StructType().add("span_md5", StringType), ltBatch)
-      .select(col("span_md5"))
+    StoreCompaction.read(spark, storeDir,
+      new StructType().add("span_md5", StringType), ltBatch).rows
 }

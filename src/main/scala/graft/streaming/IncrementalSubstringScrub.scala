@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructType}
 import graft.operators.Dedup
 
@@ -13,18 +12,12 @@ import graft.operators.Dedup
   * ingest tokenizes only its own batch and probes a membership set of
   * ONE 8-byte hash per distinct word-k-gram ever seen (no text, no
   * positions, no ids: the minimal state the first-occurrence rule
-  * needs). The streaming twin of query d16, structured exactly like
-  * [[IncrementalSpanDedup]] (the grid-span sibling).
-  *
-  * Idempotence: both sinks write `batch_id=<n>` overwrite partitions,
-  * and a replayed micro-batch reads the store WITHOUT its own
-  * partition's prior attempt (strictly lower batch ids), so the scrub
-  * is bit-identical across at-least-once redeliveries.
+  * needs). The streaming twin of query d16; runs on [[MicroBatch]]
+  * over a [[StoreCompaction]] store.
   *
   * Store growth is monotone append-only and partitions are DISJOINT by
   * construction (each batch appends only hashes the store lacked), so
-  * [[compactStore]] is a plain concatenation fold on the
-  * snapshot+delta cadence of the sibling stores.
+  * [[compactStore]] is a plain concatenation fold.
   */
 object IncrementalSubstringScrub {
 
@@ -33,13 +26,10 @@ object IncrementalSubstringScrub {
   def runOnce(spark: SparkSession, schema: StructType, inputDir: String,
               idCol: String, textCol: String,
               storeDir: String, cleanOutDir: String, checkpointDir: String,
-              k: Int = 8): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-      .select(col(idCol), col(textCol))
-    val q = in.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val store = readStore(s, storeDir, ltBatch = batchId)
+              k: Int = 8): Unit =
+    MicroBatch.run(spark, schema, inputDir, idCol, textCol, checkpointDir) {
+      (batch, batchId) =>
+        val store = readStore(batch.sparkSession, storeDir, ltBatch = batchId)
         // ONE tokenization pass (checkpointed) feeds both the scrub
         // and the store delta, and ONE store anti-join
         // (freshSubstringGrams) feeds both consumers — the store is
@@ -53,32 +43,18 @@ object IncrementalSubstringScrub {
         // append AFTER scrubbing: the batch must not see its own grams
         // on the store side (everything would scrub to ""); fresh-only
         // keeps partitions disjoint for the compaction fold
-        fresh.select(col("gh")).distinct()
-          .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
-        graft.sources.StoreManifest.commitBatch(s, storeDir, s"batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+        StoreCompaction.commit(fresh.select(col("gh")).distinct(), storeDir, batchId)
+    }
 
-  /** Fold the `batch_id=` pile through `uptoBatch` into a fresh
-    * negative-id snapshot and drop the folded partitions — same replay
-    * reasoning and mechanics as [[IncrementalSpanDedup.compactStore]]
-    * ([[StoreCompaction.fold]]): the snapshot never aliases a live
-    * batch id, and the NEWEST batch (the only one structured streaming
-    * can still replay) must never fold. */
+  /** Fold the `batch_id=` pile through `uptoBatch` into one snapshot
+    * ([[StoreCompaction.fold]]); the newest batch never folds. */
   def compactStore(spark: SparkSession, storeDir: String,
                    uptoBatch: Long): Unit =
-    StoreCompaction.fold(spark, storeDir, uptoBatch, _.distinct())
+    StoreCompaction.fold(spark, storeDir, uptoBatch)(StoreCompaction.concat(_.distinct()))
 
-  /** The gram-hash membership set as of just before `ltBatch` (replay
-    * safety: a batch's own earlier attempt is excluded). Resolved
-    * through the store manifest when one exists. */
+  /** The gram-hash membership set as of just before `ltBatch`. */
   def readStore(spark: SparkSession, storeDir: String,
                 ltBatch: Long): DataFrame =
-    StoreCompaction.readResolved(spark, storeDir,
-      new StructType().add("gh", LongType), ltBatch)
+    StoreCompaction.read(spark, storeDir,
+      new StructType().add("gh", LongType), ltBatch).rows
 }

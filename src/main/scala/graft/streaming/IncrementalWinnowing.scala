@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import graft.operators.Dedup
 
 /** Continuous partial-overlap detection: each micro-batch is winnowed
@@ -12,20 +10,14 @@ import graft.operators.Dedup
   * ([[graft.operators.Dedup.incrementalWinnowingOverlap]]), and its
   * `(id, fp)` rows join the store — per batch the work is
   * O(batch + fingerprint collisions), the corpus is never re-winnowed,
-  * and old-old pairs never re-emit. The streaming twin of query d17,
-  * structured exactly like [[IncrementalSpanDedup]] /
-  * [[IncrementalSubstringScrub]].
+  * and old-old pairs never re-emit. The streaming twin of query d17;
+  * runs on [[MicroBatch]] over a [[StoreCompaction]] store.
   *
   * Unlike the scrub stores (pure membership sets), this store carries
   * `(id, fp)` — pairing needs the document ids on the store side — so
   * partitions are NOT deduplicated against each other; that is fine:
   * each batch appends only its own documents' fingerprints, and ids
   * are unique across batches, so partitions stay disjoint by id.
-  *
-  * Idempotence: both sinks write `batch_id=<n>` overwrite partitions
-  * and a replay reads the store without its own prior attempt
-  * (strictly lower batch ids), so pairs are bit-identical across
-  * at-least-once redeliveries.
   */
 object IncrementalWinnowing {
 
@@ -37,63 +29,42 @@ object IncrementalWinnowing {
               idCol: String, textCol: String,
               fpStoreDir: String, pairsOutDir: String, checkpointDir: String,
               k: Int = 4, w: Int = 4, minShared: Long = 3,
-              fpDfCap: Long = 1000L): Unit = {
-    val in = spark.readStream.schema(schema).parquet(inputDir)
-      .select(col(idCol), col(textCol))
-    val q = in.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // ONE manifest resolve serves both the store read and the
-        // uniqueFps decision (a separate isManaged call would re-pay
-        // the driver-side metadata round-trip every micro-batch)
-        val (store, managed) = StoreCompaction.readResolvedManaged(
-          s, fpStoreDir, new StructType().add(idCol, schema(idCol).dataType)
-            .add("fp", LongType), ltBatch = batchId)
+              fpDfCap: Long = 1000L): Unit =
+    MicroBatch.run(spark, schema, inputDir, idCol, textCol, checkpointDir) {
+      (batch, batchId) =>
+        val store = StoreCompaction.read(batch.sparkSession, fpStoreDir,
+          storeSchema(idCol, schema(idCol).dataType), ltBatch = batchId)
         // ONE winnowing pass (checkpointed inside the operator) feeds
         // both the pairing and the store delta
         val newFps = Dedup.winnowedFingerprints(batch, idCol, textCol, k, w)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // uniqueFps: a manifest-resolved store read is duplicate-free
-          // by construction, so the df count needs no distinct shield
-          Dedup.incrementalWinnowingOverlapFromFps(newFps, store, idCol,
-              minShared, fpDfCap, uniqueFps = managed)
+          // uniqueFps: a duplicate-free store read needs no distinct
+          // shield under the df count
+          Dedup.incrementalWinnowingOverlapFromFps(newFps, store.rows, idCol,
+              minShared, fpDfCap, uniqueFps = store.duplicateFree)
             .write.mode("overwrite").parquet(s"$pairsOutDir/batch_id=$batchId")
           // append AFTER pairing (the batch must not meet itself twice)
-          newFps.write.mode("overwrite")
-            .parquet(s"$fpStoreDir/batch_id=$batchId")
-          graft.sources.StoreManifest.commitBatch(s, fpStoreDir, s"batch_id=$batchId")
+          StoreCompaction.commit(newFps, fpStoreDir, batchId)
         } finally newFps.unpersist()
         ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
-  /** Fingerprint-store compaction: fold the `batch_id=` pile through
-    * `uptoBatch` into a fresh negative-id snapshot and drop the folded
-    * partitions — the [[IncrementalSubstringScrub.compactStore]] shape
-    * ([[StoreCompaction.fold]]). Partitions are disjoint by id on a
-    * clean history; the legacy-path `distinct` absorbs the crash window
-    * where a prior interrupted compaction left rows in both the base
-    * and a folded partition (impossible through a manifest resolve).
-    * The NEWEST batch (the only one structured streaming can still
-    * replay) must never fold. */
+  /** Fingerprint-store compaction ([[StoreCompaction.fold]]).
+    * Partitions are disjoint by id on a clean history; `distinct`
+    * absorbs the duplicates of a resolve that is not duplicate-free. */
   def compactStore(spark: SparkSession, storeDir: String,
                    uptoBatch: Long): Unit =
-    StoreCompaction.fold(spark, storeDir, uptoBatch, _.distinct())
+    StoreCompaction.fold(spark, storeDir, uptoBatch)(StoreCompaction.concat(_.distinct()))
 
   /** The accumulated (id, fp) fingerprint table as of just before
-    * `ltBatch` (replay safety: a batch's own earlier attempt is
-    * excluded). `idType` shapes the empty first-batch frame — the
+    * `ltBatch`. `idType` shapes the empty first-batch frame — the
     * operator family is generic over orderable id types, so the store
-    * must not hard-code one. Resolved through the store manifest when
-    * one exists. */
+    * must not hard-code one. */
   def readStore(spark: SparkSession, storeDir: String, idCol: String,
-                idType: org.apache.spark.sql.types.DataType,
-                ltBatch: Long): DataFrame =
-    StoreCompaction.readResolved(spark, storeDir,
-      new StructType().add(idCol, idType).add("fp", LongType), ltBatch)
+                idType: DataType, ltBatch: Long): DataFrame =
+    StoreCompaction.read(spark, storeDir, storeSchema(idCol, idType), ltBatch).rows
+
+  private def storeSchema(idCol: String, idType: DataType): StructType =
+    new StructType().add(idCol, idType).add("fp", LongType)
 }

@@ -6,106 +6,104 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import graft.sources.StoreManifest
 
-/** Shared read/fold machinery for the `batch_id=` incremental stores
-  * (sig, span, gram, fingerprint) — one implementation of the
-  * manifest-vs-legacy resolution rules:
+/** The store protocol of the `batch_id=` incremental stores (sig,
+  * label, span, gram, fingerprint, ANN code) — the one place that
+  * knows the manifest-vs-legacy resolution rules. Every store needs
+  * three operations:
   *
-  *  - READ: a managed store resolves through its newest manifest
-  *    version (atomic old-or-new across compactions, duplicate-free by
-  *    construction); an unmanaged pile root-scans as before.
-  *  - FOLD: the snapshot goes to a FRESH directory
-  *    (`batch_id=min(-(uptoBatch+1), min(resolved ids)-1)` — fresh by
-  *    construction even when a fold is RETRIED at an already-folded
-  *    horizon; negative so it sorts before every live batch and can
-  *    never alias a replayable id), the manifest swap publishes
-  *    it atomically, and only then are the folded directories deleted.
-  *    Readers therefore never observe a folded row twice — the
-  *    interrupted-compaction duplicate absorber is needed only on the
-  *    legacy root-scan path.
+  *  - [[read]]: the live batches strictly before a batch id, under the
+  *    store's declared schema. A managed store resolves through its
+  *    newest manifest version (atomic old-or-new across compactions,
+  *    duplicate-free unless a legacy migration flagged it); an
+  *    unmanaged pile reads the batch directories first contact would
+  *    migrate ([[StoreManifest.legacyNames]]) and is never called
+  *    duplicate-free. Directories the resolve does not list are
+  *    invisible.
+  *  - [[commit]]: write one batch directory with overwrite, then add it
+  *    to the manifest. A replayed micro-batch (foreachBatch is
+  *    at-least-once) rewrites its own directory, and since a batch only
+  *    ever reads ids below its own, the replay reads what the first
+  *    attempt read: replays are bit-identical.
+  *  - [[fold]]: compaction. The snapshot goes to a FRESH directory
+  *    (`batch_id=min(-(uptoBatch+1), min(resolved ids)-1)` — fresh even
+  *    when a fold is RETRIED at an already-folded horizon; negative so
+  *    it sorts before every live batch and can never alias a replayable
+  *    id), the manifest swap publishes it atomically, and only then are
+  *    the folded directories deleted. Readers never observe a folded
+  *    row twice.
   */
-private[streaming] object StoreCompaction {
+private[graft] object StoreCompaction {
 
   private def idOf(name: String): Long = name.stripPrefix("batch_id=").toLong
 
-  /** The resolved store content strictly before `ltBatch`, projected to
-    * `schema`'s columns; a correctly-typed empty frame when the store
-    * resolves to no live data. */
-  def readResolved(spark: SparkSession, storeDir: String,
-                   schema: StructType, ltBatch: Long): DataFrame =
-    readResolvedManaged(spark, storeDir, schema, ltBatch)._1
-
-  /** [[readResolved]] plus whether the read is DUPLICATE-FREE — the
-    * streaming drivers need both (the flag decides the
-    * uniqueIds/uniqueFps dedup-shield opt-out), and a separate
-    * `isManaged` call would re-pay the manifest resolve on the hot
-    * per-batch path. ONE resolve per read: resolve() is a listStatus +
-    * open on `_manifest`, and this runs on every micro-batch —
-    * resolving once and branching beats the resolvesEmpty/readLive
-    * pair (2-3 round trips of driver-side metadata I/O on an object
-    * store). Duplicate-free requires BOTH manifest management (each
-    * batch dir listed exactly once, old-or-new compaction visibility)
-    * AND no inherited duplicate-possible horizon from an ambiguous
-    * legacy migration (StoreManifest.Manifest.dupesUpto) — a migrated
-    * interrupted RESERVED-name compaction lists rows twice until a
-    * full-range fold rewrites it, and the shields must stay on. */
-  def readResolvedManaged(spark: SparkSession, storeDir: String,
-                          schema: StructType,
-                          ltBatch: Long): (DataFrame, Boolean) = {
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    def project(df: DataFrame) = df
-      .filter(col("batch_id") < ltBatch)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+  /** One resolve of a store: its live batch-directory names and
+    * whether reading them is duplicate-free. The only manifest-vs-
+    * legacy branch. One resolve per read: each is a listStatus + open
+    * on `_manifest`, driver-side metadata I/O on the per-batch path. */
+  private def live(spark: SparkSession, storeDir: String): (Seq[String], Boolean) =
     StoreManifest.resolve(spark, storeDir) match {
-      case Some(m) =>
-        (if (m.dirs.isEmpty) empty
-         else project(StoreManifest.readDirs(spark, storeDir, m.dirs)),
-         m.duplicateFree)
-      case None =>
-        (if (StoreManifest.legacyNames(spark, storeDir).isEmpty) empty
-         else project(spark.read.parquet(storeDir)), false) // batch_id partition col
+      case Some(m) => (m.dirs, m.duplicateFree)
+      case None => (StoreManifest.legacyNames(spark, storeDir), false)
     }
+
+  /** One [[read]]: the rows, the batch ids they came from, and whether
+    * they are duplicate-free. Duplicate-free needs BOTH a managed store
+    * (each batch directory listed once) AND no duplicate-possible
+    * horizon inherited from an ambiguous legacy migration
+    * (StoreManifest.Manifest.dupesUpto); callers keep their dedup
+    * shields on otherwise. */
+  final case class Read(rows: DataFrame, batchIds: Seq[Long], duplicateFree: Boolean)
+
+  /** The live batches strictly before `ltBatch`, projected to
+    * `schema`'s columns and read under it (columns older files lack
+    * null-fill; a `batch_id` field keeps the partition column); a
+    * correctly-typed empty frame when nothing qualifies. */
+  def read(spark: SparkSession, storeDir: String, schema: StructType,
+           ltBatch: Long): Read = {
+    val (names, duplicateFree) = live(spark, storeDir)
+    val kept = names.filter(idOf(_) < ltBatch)
+    val rows =
+      if (kept.isEmpty) spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      else StoreManifest.readDirs(spark, storeDir, kept, Some(schema))
+        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    Read(rows, kept.map(idOf), duplicateFree)
+  }
+
+  /** The live batch directories' paths — for a caller that inspects the
+    * stored files themselves (the ANN layout check). */
+  def liveDirs(spark: SparkSession, storeDir: String): Seq[String] =
+    live(spark, storeDir)._1.map(n => s"$storeDir/$n")
+
+  /** Write `rows` as batch `batchId` (overwrite), then publish it. */
+  def commit(rows: DataFrame, storeDir: String, batchId: Long): Unit = {
+    val name = s"batch_id=$batchId"
+    rows.write.mode("overwrite").parquet(s"$storeDir/$name")
+    StoreManifest.commitBatch(rows.sparkSession, storeDir, name)
   }
 
   /** Fold everything with `batch_id <= uptoBatch` (prior snapshots
     * included — their ids are negative) into one fresh snapshot
-    * directory and retire the folded ones. `legacyDedup` is the
-    * interrupted-compaction duplicate absorber, applied whenever the
-    * resolve cannot guarantee uniqueness: an unmanaged pile's root-scan
-    * can see a snapshot and its folded partitions together, and a
-    * managed listing that migrated an ambiguous legacy state carries
-    * the same duplication inside its listed set until this fold
-    * rewrites it (clearing the flag at the publish).
+    * directory and retire the folded ones. `snapshot` makes the
+    * snapshot's rows from the folded rows (their `batch_id` column
+    * included) and whether those are duplicate-free; see [[concat]].
     * The newest batch (the only one structured streaming can still
-    * replay) must never fold — same guard as always. */
-  def fold(spark: SparkSession, storeDir: String, uptoBatch: Long,
-           legacyDedup: DataFrame => DataFrame): Unit = {
+    * replay) must never fold. */
+  def fold(spark: SparkSession, storeDir: String, uptoBatch: Long)
+          (snapshot: (DataFrame, Boolean) => DataFrame): Unit = {
     require(uptoBatch >= 0, "uptoBatch must be a real batch id")
     val root = new Path(storeDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
-    val managed = StoreManifest.resolve(spark, storeDir)
-    val names = managed.map(_.dirs).getOrElse(
-      fs.listStatus(root).map(_.getPath.getName)
-        .filter(_.startsWith("batch_id=")).toSeq)
+    val (names, duplicateFree) = live(spark, storeDir)
     require(names.map(idOf).exists(_ > uptoBatch),
       s"refusing to compact through batch $uptoBatch: it is the newest " +
         "batch and may still be replayed — compact only after a newer " +
         "batch has committed")
     val foldNames = names.filter(n => idOf(n) <= uptoBatch)
     if (foldNames.isEmpty) return // nothing below the horizon: no-op
-    val resolved = (managed match {
-      case Some(m) => StoreManifest.readDirs(spark, storeDir, m.dirs)
-      case None => spark.read.parquet(storeDir)
-    }).filter(col("batch_id") <= uptoBatch).drop("batch_id")
-    // dedup the snapshot unless the resolve GUARANTEES uniqueness: an
-    // unmanaged root-scan can see an interrupted compaction's rows
-    // twice, and a managed-but-flagged listing (ambiguous legacy
-    // migration, StoreManifest.Manifest.dupesUpto) lists them twice by
-    // construction — folding either without the absorber would bake
-    // the duplicates into the snapshot permanently
-    val snapshot = if (managed.exists(_.duplicateFree)) resolved
-                   else legacyDedup(resolved)
+    val rows = snapshot(StoreManifest.readDirs(spark, storeDir, foldNames),
+      duplicateFree)
     // the snapshot id must be fresh against EVERY resolved name, not
     // just "fold horizons strictly increase": a retried fold at an
     // already-folded horizon would otherwise target its own listed
@@ -114,10 +112,21 @@ private[streaming] object StoreCompaction {
     // half-clobbered files on executor loss). min(existing)-1 keeps the
     // first-fold name at -(uptoBatch+1) and gives every retry a fresh,
     // still-negative, never-replayable id below all prior snapshots.
-    val snapId = math.min(-(uptoBatch + 1), names.map(idOf).min - 1)
-    val snapName = s"batch_id=$snapId"
-    snapshot.write.mode("overwrite").parquet(s"$storeDir/$snapName")
+    val snapName = s"batch_id=${math.min(-(uptoBatch + 1), names.map(idOf).min - 1)}"
+    rows.write.mode("overwrite").parquet(s"$storeDir/$snapName")
     StoreManifest.replace(spark, storeDir, foldNames.toSet, Seq(snapName))
     foldNames.foreach(n => fs.delete(new Path(root, n), true))
+  }
+
+  /** The [[fold]] snapshot of an append-only store: the folded rows
+    * themselves. `dedup` absorbs the duplicates a resolve that is not
+    * duplicate-free may carry — an unmanaged pile, or a managed listing
+    * that migrated an ambiguous legacy state (the fold through its
+    * horizon rewrites it and clears the flag). Folding those without
+    * the absorber would bake the duplicates into the snapshot. */
+  def concat(dedup: DataFrame => DataFrame)
+            (folded: DataFrame, duplicateFree: Boolean): DataFrame = {
+    val rows = folded.drop("batch_id")
+    if (duplicateFree) rows else dedup(rows)
   }
 }

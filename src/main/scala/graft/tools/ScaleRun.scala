@@ -8,10 +8,7 @@ import org.apache.spark.graft.TaskMetricsTap.cellJson
   * shuffle/spill/GC task-metric deltas per query, so near-linearity is
   * measured, not argued from plan shape. Also records recall@k of the
   * approximate ANN paths against the brute-force exact top-k at every
-  * scale, and times u5 both with its recompute-the-scrub-subtree choice
-  * and with an eager localCheckpoint of the scrub result
-  * (-Dgraft.u5.checkpoint=true), so that design decision is re-measured
-  * at scale instead of carried forward.
+  * scale.
   *
   * Usage: ScaleRun <label=dir>[,<label=dir>...] [outJsonPath]
   */
@@ -303,19 +300,6 @@ object ScaleRun {
         s"""{"label":"$label","dir":"$dir","prebuild":$preJson,""" +
           s""""queries":{${qJsons.mkString(",")}}$skewExtra}"""
       } else {
-      // u5 variant: eager localCheckpoint of the scrub subtree instead
-      // of recomputing it into both consumers. The first (recompute)
-      // u5 run above pays first-touch costs the variant then rides on,
-      // so ALSO re-time the recompute form afterwards — the variant vs
-      // rerun comparison is warm-vs-warm.
-      System.setProperty("graft.u5.checkpoint", "true")
-      val (_, u5ckSec, u5ckM) = try tap.measure(spark.sparkContext)(
-        graft.SparkEntry.queries("u5_incremental_ingest")(spark, dir).count())
-      finally System.clearProperty("graft.u5.checkpoint")
-      System.err.println(f"[scale] $label u5(+checkpoint)          ${u5ckSec}%8.2f s")
-      val (_, u5reSec, u5reM) = tap.measure(spark.sparkContext)(
-        graft.SparkEntry.queries("u5_incremental_ingest")(spark, dir).count())
-      System.err.println(f"[scale] $label u5(recompute, warm)      ${u5reSec}%8.2f s")
       // (The ad-hoc scaled-geometry variant blocks that used to run
       // here are gone: the scale-safe c5/d10 configurations are
       // DECLARED queries since rounds 10-11 — c5_embedding_clusters_
@@ -335,8 +319,6 @@ object ScaleRun {
       }
       s"""{"label":"$label","dir":"$dir","prebuild":$preJson,""" +
         s""""queries":{${qJsons.mkString(",")}},""" +
-        s""""u5_checkpoint_variant":${cellJson(u5ckSec, u5ckM)},""" +
-        s""""u5_recompute_warm":${cellJson(u5reSec, u5reM)},""" +
         s""""recall_at_5":{${recalls.mkString(",")}},""" +
         skewContrastJson() + "}"
       }

@@ -109,8 +109,7 @@ object StreamTwinRun {
         else
           graft.operators.Dedup.winnowedFingerprints(docs, "doc_id", "text",
             k = 3, w = 4)
-      store.write.mode("overwrite").parquet(s"$storeDir/batch_id=-1")
-      graft.sources.StoreManifest.commitBatch(spark, storeDir, "batch_id=-1")
+      graft.streaming.StoreCompaction.commit(store, storeDir, batchId = -1)
     }
     System.err.println(f"[streamtwin] $label $which build  ${bSec}%8.2f s  " +
       f"shuffle ${(bM(0) + bM(1)) / 1e6}%.0f MB")

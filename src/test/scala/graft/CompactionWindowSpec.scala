@@ -226,7 +226,7 @@ class CompactionWindowSpec extends SparkSpec {
     // own listed input would overwrite the directory its lazy write
     // plan is reading — and the resolved store must be unchanged
     IncrementalDedup.compactSigs(spark, post, uptoBatch = 0)
-    val listed = graft.sources.StoreManifest.latest(spark, post).get._2
+    val listed = graft.sources.StoreManifest.resolve(spark, post).get.dirs
     assert(listed.exists(_.stripPrefix("batch_id=").toLong < -1),
       s"retry must target a fresh id below all prior snapshots: $listed")
     assert(storeDf(post).collect().map(_.toString).sorted.toSeq == wantRows,

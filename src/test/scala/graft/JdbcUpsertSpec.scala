@@ -118,7 +118,7 @@ class JdbcUpsertSpec extends SparkSpec {
       "window not exercised: folded dirs missing from disk")
     // stream the RESOLVED live set (never the root glob — that is the
     // mixed read the manifest exists to prevent) through the real sink
-    val (_, live) = StoreManifest.latest(spark, dir).get
+    val live = StoreManifest.resolve(spark, dir).get.dirs
     val glob = s"$dir/batch_id={${live.map(_.stripPrefix("batch_id=")).mkString(",")}}"
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("abn",

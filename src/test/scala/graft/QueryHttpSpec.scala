@@ -96,7 +96,8 @@ class QueryHttpSpec extends SparkSpec {
     // (the re-resolve-per-request consumer); returns every abn served,
     // with multiplicity — mixed visibility shows up as duplicates
     def served(): Seq[String] = {
-      val df = StoreManifest.readLive(spark, dir).get.drop("batch_id")
+      val df = StoreManifest.readDirs(spark, dir,
+        StoreManifest.resolve(spark, dir).get.dirs).drop("batch_id")
       val srv = new QueryHttpServer(df)
       val port = srv.start()
       try {

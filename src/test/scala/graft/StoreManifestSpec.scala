@@ -9,24 +9,28 @@ class StoreManifestSpec extends SparkSpec {
 
   private def tmp() = Files.createTempDirectory("graft-manifest").toString
 
+  /** The live set's rows, read through one resolve. */
+  private def readLive(dir: String) =
+    StoreManifest.readDirs(spark, dir, StoreManifest.resolve(spark, dir).get.dirs)
+
   private def writeBatch(dir: String, id: Long, rows: Seq[Long]): Unit =
     rows.toDF("v").coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/batch_id=$id")
 
   test("unmanaged until first commit; commitBatch is idempotent") {
     val dir = tmp()
-    assert(StoreManifest.latest(spark, dir).isEmpty)
-    assert(StoreManifest.resolvesEmpty(spark, dir))
+    assert(StoreManifest.resolve(spark, dir).isEmpty)
+    assert(StoreManifest.legacyNames(spark, dir).isEmpty)
     writeBatch(dir, 0, Seq(1L, 2L))
     StoreManifest.commitBatch(spark, dir, "batch_id=0")
-    val Some((v0, live0)) = StoreManifest.latest(spark, dir)
-    assert(live0 == Seq("batch_id=0"))
+    val m0 = StoreManifest.resolve(spark, dir).get
+    assert(m0.dirs == Seq("batch_id=0"))
     // a replayed micro-batch re-commits its own dir: no new version
     StoreManifest.commitBatch(spark, dir, "batch_id=0")
-    assert(StoreManifest.latest(spark, dir).get._1 == v0)
+    assert(StoreManifest.resolve(spark, dir).get.version == m0.version)
     writeBatch(dir, 1, Seq(3L))
     StoreManifest.commitBatch(spark, dir, "batch_id=1")
-    assert(StoreManifest.latest(spark, dir).get._2.toSet ==
+    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
       Set("batch_id=0", "batch_id=1"))
   }
 
@@ -37,7 +41,7 @@ class StoreManifestSpec extends SparkSpec {
     // legacy pile, no manifest — a new batch commit adopts the history
     writeBatch(dir, 2, Seq(3L))
     StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    assert(StoreManifest.latest(spark, dir).get._2.toSet ==
+    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
       Set("batch_id=0", "batch_id=1", "batch_id=2"))
   }
 
@@ -49,7 +53,7 @@ class StoreManifestSpec extends SparkSpec {
     // committed (a writer mid-crash, or a compactor's fresh snapshot):
     // invisible until its commit
     writeBatch(dir, 1, Seq(3L))
-    val live = StoreManifest.readLive(spark, dir).get
+    val live = readLive(dir)
     assert(live.select($"v").as[Long].collect().toSet == Set(1L, 2L))
     // the batch_id partition column survives the basePath read
     assert(live.columns.contains("batch_id"))
@@ -62,11 +66,11 @@ class StoreManifestSpec extends SparkSpec {
     writeBatch(dir, -1, Seq(1L)) // the folded snapshot
     StoreManifest.replace(spark, dir, drop = Set("batch_id=0"),
       add = Seq("batch_id=-1"))
-    assert(StoreManifest.latest(spark, dir).get._2.toSet ==
+    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
       Set("batch_id=-1", "batch_id=1"))
     // the old version remains readable (KeepVersions window) but
-    // latest() never returns it
-    val vals = StoreManifest.readLive(spark, dir).get
+    // resolve() never returns it
+    val vals = readLive(dir)
       .select($"v").as[Long].collect().toSet
     assert(vals == Set(1L, 2L))
   }
@@ -84,7 +88,7 @@ class StoreManifestSpec extends SparkSpec {
     // folded history)
     StoreManifest.replace(spark, dir, drop = Set("batch_id=-1"),
       add = Seq("batch_id=-1"))
-    assert(StoreManifest.latest(spark, dir).get._2.toSet ==
+    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
       Set("batch_id=-1", "batch_id=1"))
   }
 
@@ -92,17 +96,17 @@ class StoreManifestSpec extends SparkSpec {
     // crash window of the PRE-manifest layout: snapshot written and
     // committed, folded partitions not yet deleted — listing both
     // would bake every folded row into the manifest twice, forever,
-    // while isManaged simultaneously disables consumers' dup shields
+    // while the clean resolve simultaneously disables consumers' dup shields
     val dir = tmp()
     writeBatch(dir, 0, Seq(1L))
     writeBatch(dir, 1, Seq(2L))
     writeBatch(dir, -1, Seq(1L)) // snapshot folding batch 0 (complete)
     writeBatch(dir, 2, Seq(3L))
     StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    assert(StoreManifest.latest(spark, dir).get._2.toSet ==
+    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
       Set("batch_id=-1", "batch_id=1", "batch_id=2"),
       "complete snapshot supersedes its folded inputs")
-    val vals = StoreManifest.readLive(spark, dir).get
+    val vals = readLive(dir)
       .select($"v").as[Long].collect().toSeq.sorted
     assert(vals == Seq(1L, 2L, 3L), s"each row exactly once: $vals")
   }
@@ -118,7 +122,7 @@ class StoreManifestSpec extends SparkSpec {
     Files.delete(java.nio.file.Paths.get(dir, "batch_id=1", "_SUCCESS"))
     writeBatch(dir, 2, Seq(3L))
     StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    assert(StoreManifest.latest(spark, dir).get._2.toSet ==
+    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
       Set("batch_id=0", "batch_id=1", "batch_id=2"),
       "incomplete snapshot excluded; its intact folded inputs carry the data")
   }
@@ -129,7 +133,7 @@ class StoreManifestSpec extends SparkSpec {
     writeBatch(dir, -2, Seq(1L, 2L)) // deeper snapshot (folded 0 and 1, incl. -1)
     writeBatch(dir, 2, Seq(3L))
     StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    assert(StoreManifest.latest(spark, dir).get._2.toSet ==
+    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
       Set("batch_id=-2", "batch_id=2"),
       "the most negative complete snapshot folded everything at or below its horizon")
   }
@@ -153,7 +157,7 @@ class StoreManifestSpec extends SparkSpec {
     assert(m.dirs.toSet == Set("batch_id=-1", "batch_id=1", "batch_id=2"))
     assert(m.dupesUpto.contains(2L) && !m.duplicateFree,
       s"ambiguous -1 snapshot must flag ids <= max surviving positive: $m")
-    val vals = StoreManifest.readLive(spark, dir).get
+    val vals = readLive(dir)
       .select($"v").as[Long].collect().toSeq.sorted
     assert(vals == Seq(1L, 2L, 2L, 3L),
       s"lossless listing duplicates batch 1's row, never drops it: $vals")
@@ -171,7 +175,7 @@ class StoreManifestSpec extends SparkSpec {
     graft.streaming.IncrementalSpanDedup.compactStore(spark, dir, uptoBatch = 2)
     val after = StoreManifest.resolve(spark, dir).get
     assert(after.duplicateFree, s"full-range fold must clear the flag: $after")
-    val deduped = StoreManifest.readLive(spark, dir).get
+    val deduped = readLive(dir)
       .select($"v").as[Long].collect().toSeq.sorted
     assert(deduped == Seq(1L, 2L, 3L, 4L), s"fold absorbed the duplicate: $deduped")
   }
@@ -195,6 +199,6 @@ class StoreManifestSpec extends SparkSpec {
     val files = new java.io.File(s"$dir/_manifest").listFiles()
       .map(_.getName).filter(_.startsWith("v")).sorted
     assert(files.length <= 4, s"expected <= 4 kept versions, got ${files.toSeq}")
-    assert(StoreManifest.latest(spark, dir).get._2.length == 7)
+    assert(StoreManifest.resolve(spark, dir).get.dirs.length == 7)
   }
 }

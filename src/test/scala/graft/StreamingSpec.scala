@@ -336,6 +336,97 @@ class StreamingSpec extends SparkSpec {
     assert(dirs == Set("batch_id=-2", "batch_id=2"),
       s"expected snapshot + newest delta, got $dirs")
     assert(resolved(99) == got)
+
+    // a negative horizon is no batch id: the shared fold refuses it
+    // instead of rewriting the existing snapshot under a new name
+    val eNeg = intercept[IllegalArgumentException] {
+      IncrementalDedup.compactLabels(spark, labels, uptoBatch = -1)
+    }
+    assert(eNeg.getMessage.contains("real batch id"))
+    assert(graft.sources.StoreManifest.resolve(spark, labels).get.dirs.toSet ==
+      Set("batch_id=-2", "batch_id=2"))
+    assert(resolved(99) == got)
+  }
+
+  test("store protocol: every store commits through the manifest; unlisted batch dirs are invisible") {
+    // Every store-backed operator writes its store through
+    // StoreCompaction.commit and reads it through StoreCompaction.read,
+    // so a batch directory the manifest does not list (a crashed
+    // writer's leftover, a compactor's unpublished snapshot) never
+    // reaches a micro-batch. Pipeline A gets a planted, unlisted
+    // batch_id=7 in every store, built to change the next batch's
+    // output if it were read; pipeline B is the clean twin.
+    import graft.streaming.{IncrementalSpanDedup, IncrementalSubstringScrub, IncrementalWinnowing}
+    val root = Files.createTempDirectory("graft-protocol")
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    val docs0 = Seq(1L -> base, 2L -> (base + " tail"),
+      3L -> "unrelated words only here nothing shared")
+    val docs1 = Seq(4L -> (base + " coda"),
+      5L -> "unrelated words only here and something new")
+    val v1 = Array(1f, 0f, 1f, 0f, 1f, 0f, 1f, 0f)
+    val v2 = Array(0.98f, 0.02f, 1f, 0f, 1f, 0f, 1f, 0f)
+    val v3 = Array(0f, 1f, 0f, 1f, 0f, 1f, 0f, 1f)
+    val v4 = Array(0.99f, 0.01f, 1f, 0f, 1f, 0f, 1f, 0f)
+    val stores = Seq("sigs", "labels", "spans", "grams", "fps", "codes")
+    val outs = Seq("pairs", "spans", "grams", "fps", "ann")
+    def path(tag: String, name: String) = root.resolve(s"$tag/$name").toString
+    def ingest(tag: String, docs: Seq[(Long, String)],
+               vecs: Seq[(Long, Array[Float])]): Unit = {
+      def p(name: String) = path(tag, name)
+      docs.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(p("in"))
+      vecs.toDF("vec_id", "embedding").coalesce(1).write.mode("append").parquet(p("vin"))
+      val schema = spark.read.parquet(p("in")).schema
+      IncrementalDedup.runOnce(spark, schema, p("in"), "doc_id", "text",
+        p("sigs"), p("out-pairs"), p("ck-dedup"), labelsStoreDir = Some(p("labels")))
+      IncrementalSpanDedup.runOnce(spark, schema, p("in"), "doc_id", "text",
+        p("spans"), p("out-spans"), p("ck-spans"), spanTokens = 3)
+      IncrementalSubstringScrub.runOnce(spark, schema, p("in"), "doc_id", "text",
+        p("grams"), p("out-grams"), p("ck-grams"), k = 2)
+      IncrementalWinnowing.runOnce(spark, schema, p("in"), "doc_id", "text",
+        p("fps"), p("out-fps"), p("ck-fps"), k = 2, w = 2, minShared = 1)
+      IncrementalAnn.runOnce(spark, spark.read.parquet(p("vin")).schema, p("vin"),
+        "vec_id", "embedding", p("codes"), p("out-ann"), p("ck-ann"),
+        dim = 8, m = 4, codewords = 16)
+    }
+    def listed(tag: String, store: String): Seq[String] =
+      graft.sources.StoreManifest.resolve(spark, path(tag, store))
+        .map(_.dirs).getOrElse(Nil)
+    for (tag <- Seq("A", "B")) {
+      ingest(tag, docs0, Seq(1L -> v1, 2L -> v2, 3L -> v3))
+      for (store <- stores)
+        assert(listed(tag, store) == Seq("batch_id=0"),
+          s"$tag/$store must resolve to exactly its committed batch")
+    }
+
+    // the plants: id-keyed stores get batch 0's rows under new ids (a
+    // read would pair the next batch with them), the label store
+    // relabels batch 0's cluster, and the membership stores hold the
+    // next batch's own spans and grams (a read would scrub it bare)
+    def plant(store: String, rows: org.apache.spark.sql.DataFrame): Unit =
+      rows.coalesce(1).write.parquet(path("A", s"$store/batch_id=7"))
+    def batch0(store: String) = spark.read.parquet(path("A", s"$store/batch_id=0"))
+    plant("sigs", batch0("sigs").withColumn("doc_id", $"doc_id" + 100))
+    plant("fps", batch0("fps").withColumn("doc_id", $"doc_id" + 100))
+    plant("codes", batch0("codes").withColumn("id", $"id" + 100))
+    plant("labels", batch0("labels").withColumn("cluster", lit(-5L)))
+    val next = docs1.toDF("doc_id", "text")
+    plant("spans", graft.operators.Dedup.spanStore(next, "doc_id", "text", 3))
+    plant("grams", graft.operators.Dedup.substringGramStore(next, "text", 2))
+
+    for (tag <- Seq("A", "B")) ingest(tag, docs1, Seq(4L -> v4))
+    assert(snap(path("B", "out-pairs/batch_id=1")).nonEmpty &&
+      snap(path("B", "out-ann/batch_id=1")).nonEmpty,
+      "test precondition: batch 1 pairs against batch 0")
+    for (out <- outs)
+      assert(snap(path("A", s"out-$out/batch_id=1")) ==
+        snap(path("B", s"out-$out/batch_id=1")),
+        s"an unlisted store directory changed the $out output")
+    for (store <- stores) {
+      assert(snap(path("A", s"$store/batch_id=1")) ==
+        snap(path("B", s"$store/batch_id=1")),
+        s"an unlisted store directory changed the $store delta")
+      assert(listed("A", store) == Seq("batch_id=0", "batch_id=1"))
+    }
   }
 
   test("streaming ANN: PQ code store accumulates, near-dups found across batches") {
@@ -968,7 +1059,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup replay: redelivered batch re-pairs identically, labels and sigs intact") {
     // the sig store read excludes the batch's own prior attempt
-    // (StoreCompaction.readResolvedManaged's ltBatch filter) — without
+    // (StoreCompaction.read's ltBatch filter) — without
     // it the replay would verify every doc against its own
     // first-attempt copy and double each pair row
     val root = Files.createTempDirectory("graft-dedupreplay")
