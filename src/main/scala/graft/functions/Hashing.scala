@@ -25,21 +25,11 @@ object Hashing {
   /** Word k-shingles; a document shorter than k tokens contributes its
     * whole text as one shingle; NULL text propagates to NULL (matching
     * the native kernels — AdversarialTextSpec pins the agreement).
-    * Kernel expression — the declarative twin below runs a `transform`
-    * lambda (slice + array_join) interpreted per SHINGLE per document;
-    * twin pinned in DedupSpec. */
+    * Kernel expression — the declarative twin (test tree, HashingTwin)
+    * runs a `transform` lambda (slice + array_join) interpreted per
+    * SHINGLE per document; twin pinned in DedupSpec. */
   def shingles(text: Column, k: Int): Column =
     graft.plans.TokenExprs.wordShingles(text, k)
-
-  /** [[shingles]]'s declarative twin (parity tests only). */
-  def shinglesDeclarative(text: Column, k: Int): Column = {
-    val toks = tokens(text)
-    val n = size(toks)
-    when(n >= k,
-      transform(sequence(lit(0), n - k),
-        i => array_join(slice(toks, i + 1, lit(k)), " ")))
-      .when(text.isNotNull, array(text))
-  }
 
   /** Mersenne-31 prime for the minhash affine family. */
   val M31 = 2147483647L
@@ -87,21 +77,12 @@ object Hashing {
 
   /** Character n-gram set (distinct, sorted) of the first `maxLen` chars;
     * a string shorter than n contributes itself as one gram. Kernel
-    * expression — the declarative form below runs a `transform` lambda
-    * per gram plus array_sort's interpreted comparator per comparison,
-    * per pair side (CodegenFallback); twin pinned in DedupSpec. */
+    * expression — the declarative twin (test tree, HashingTwin) runs a
+    * `transform` lambda per gram plus array_sort's interpreted
+    * comparator per comparison, per pair side (CodegenFallback); twin
+    * pinned in DedupSpec. */
   def charNgrams(text: Column, n: Int, maxLen: Int): Column =
     graft.plans.TokenExprs.charNgramSet(text, n, maxLen)
-
-  /** [[charNgrams]]'s declarative twin (parity tests only). */
-  def charNgramsDeclarative(text: Column, n: Int, maxLen: Int): Column = {
-    val s = substring(text, 1, maxLen)
-    val len = length(s)
-    when(len >= n,
-      array_sort(array_distinct(transform(
-        sequence(lit(1), len - (n - 1)), i => s.substr(i, lit(n))))))
-      .when(text.isNotNull, array(s))
-  }
 
   /** Jaccard * 100 (truncated int) between two DISTINCT arrays. */
   def jaccard100(a: Column, b: Column): Column = {
@@ -114,19 +95,12 @@ object Hashing {
   /** Rolling polynomial fingerprint of the first `maxLen` chars:
     * fold(acc*31 + ascii(char)) mod 1e9+7 (reference-style document
     * fingerprinting; overflow-free under ANSI mode). Kernel
-    * expression — the declarative twin below materializes a per-char
-    * position sequence and runs interpreted transform + aggregate
-    * lambdas per char; twin pinned in TextStatsSpec. */
+    * expression — the declarative twin (test tree, HashingTwin)
+    * materializes a per-char position sequence and runs interpreted
+    * transform + aggregate lambdas per char; twin pinned in
+    * TextStatsSpec. */
   def fingerprint(text: Column, maxLen: Int): Column =
     graft.plans.TokenExprs.polyFingerprint(text, maxLen)
-
-  /** [[fingerprint]]'s declarative twin (parity tests only). */
-  def fingerprintDeclarative(text: Column, maxLen: Int): Column = {
-    val s = substring(text, 1, maxLen)
-    val codes = transform(sequence(lit(1), greatest(length(s), lit(1))),
-      i => ascii(s.substr(i, lit(1))).cast("long"))
-    aggregate(codes, lit(0L), (acc, c) => (acc * 31 + c) % 1000000007L)
-  }
 
   // ───── DuckDB oracle twins ─────
 

@@ -58,12 +58,10 @@ object Names {
     * ONE compact expression ([[graft.plans.NormalizeName]]) running the
     * same precompiled pattern chain — Catalyst substitution duplicates a
     * single node instead of a ~27-node chain, and evaluation converts
-    * UTF8String↔String once instead of per step. Value-identical to
-    * [[normalizeNameDeclarative]] (NamesSpec property-checks). */
-  def normalizeName(c: Column): Column = graft.plans.NameExprs.normalizeName(c)
-
-  /** F-6 as the declarative regexp_replace chain — the twin the DuckDB
-    * oracle SQL mirrors literally; kept for property tests.
+    * UTF8String↔String once instead of per step. Value-identical to the
+    * declarative regexp_replace chain [[sql.normalize]] emits for the
+    * DuckDB oracle (NamesSpec property-checks the kernel against its
+    * Spark form, the test tree's `NamesTwin.normalizeNameDeclarative`).
     *
     * Non-ASCII is projected to spaces BEFORE `upper`: the engines
     * disagree on full case mappings (Java/Spark upper('ß') = 'SS',
@@ -82,29 +80,11 @@ object Names {
     * the contract a hash-gated oracle needs, and ABR company names are
     * ASCII-dominated; a consumer needing the Python behavior
     * transliterates (ß→SS, ﬁ→FI, …) BEFORE this normalize. */
-  def normalizeNameDeclarative(c: Column): Column = {
-    var s = upper(trim(regexp_replace(coalesce(c, lit("")),
-      """[^\x00-\x7F]+""", " ")))
-    s = regexp_replace(s, """&AMP;""", "&")
-    s = regexp_replace(s, """&QUOT;""", "\"")
-    s = regexp_replace(s, """&LT;""", "<")
-    s = regexp_replace(s, """&GT;""", ">")
-    for (p <- noisePatterns) s = regexp_replace(s, p, "")
-    for ((p, r) <- abbrevs) s = regexp_replace(s, p, r)
-    s = regexp_replace(s, """[^A-Za-z0-9 ]+""", " ")
-    trim(regexp_replace(s, """\s+""", " "))
-  }
+  def normalizeName(c: Column): Column = graft.plans.NameExprs.normalizeName(c)
 
   /** F-7: keyword set as a SORTED DISTINCT array (the reference returns a
     * Python set; sorting pins determinism for the oracle compare). */
   def keywordsArr(c: Column): Column = graft.plans.NameExprs.keywordsArr(c)
-
-  /** F-7 declarative twin. */
-  def keywordsArrDeclarative(c: Column): Column = {
-    val toks = split(normalizeNameDeclarative(c), " ")
-    array_sort(array_distinct(filter(toks,
-      w => length(w) >= 3 && !w.isin(keywordStopwords: _*))))
-  }
 
   /** F-7 as a space-joined string (hash-compare-friendly shape). */
   def keywords(c: Column): Column = array_join(keywordsArr(c), " ")
@@ -116,23 +96,13 @@ object Names {
     """^([A-Z][a-zA-Z\s&]{3,20})\s*[-|]""",
     """^([A-Z][a-zA-Z\s&]{3,30})$""")
 
-  private val digitsOnly = """^[0-9_\-\s]+$"""
+  private[graft] val digitsOnly = """^[0-9_\-\s]+$"""
 
   /** F-8: try each title pattern (case-insensitive search); keep the first
     * whose trimmed capture is >=3 chars and not digits/punct-only, else
     * fall back to the original title. */
   def extractFromTitle(title: Column): Column =
     graft.plans.NameExprs.extractFromTitle(title)
-
-  /** F-8 declarative twin. */
-  def extractFromTitleDeclarative(title: Column): Column = {
-    val candidates = titlePatterns.map { p =>
-      trim(regexp_extract(title, "(?i)" + p, 1))
-    }
-    candidates.foldRight(title) { (cand, rest) =>
-      when(length(cand) >= 3 && !cand.rlike(digitsOnly), cand).otherwise(rest)
-    }
-  }
 
   /** reference scripts/entity_matching.py:126-135 — all checked with
     * re.match, i.e. ANCHORED AT START (deliberate semantics: a name
@@ -148,21 +118,13 @@ object Names {
   def isValidCompanyName(c: Column): Column =
     graft.plans.NameExprs.isValidCompanyName(c)
 
-  /** F-5 declarative twin. */
-  def isValidCompanyNameDeclarative(c: Column): Column = {
-    val nonBlank = c.isNotNull && length(trim(c)) >= 3
-    invalidStartPatterns.foldLeft(nonBlank) { (acc, p) =>
-      acc && !c.rlike("(?i)" + p)
-    }
-  }
-
   // ───── DuckDB oracle twins (same pattern lists → same chain) ─────
 
   object sql {
     private def lit1(s: String) = "'" + s.replace("'", "''") + "'"
 
     def normalize(e: String): String = {
-      // pre-upper ASCII projection — see normalizeNameDeclarative's doc
+      // pre-upper ASCII projection — see normalizeName's doc
       var s = s"upper(trim(regexp_replace(coalesce($e, ''), '[^\\x00-\\x7F]+', ' ', 'g')))"
       s = s"replace(replace(replace(replace($s, '&AMP;', '&'), '&QUOT;', '\"'), '&LT;', '<'), '&GT;', '>')"
       for (p <- noisePatterns) s = s"regexp_replace($s, ${lit1(p)}, '', 'g')"

@@ -54,49 +54,33 @@ object Similarity {
       ratioAtLeast(t1, t2, floorScore))
   }
 
-  private def tokens(c: Column): Column = split(c, " ")
-
   /** Tokens sorted then re-joined — word order insensitivity. Kernel
     * expression (one pass); array_sort's default comparator would run
     * as an interpreted boxed lambda per comparison per row
-    * (CodegenFallback). Declarative twin below, pinned equal in
-    * SimilaritySpec. */
+    * (CodegenFallback). Declarative twin in the test tree
+    * (SimilarityTwin), pinned equal in SimilaritySpec. */
   def tokenSortJoin(c: Column): Column = graft.plans.TokenExprs.tokenSortJoin(c)
-
-  /** [[tokenSortJoin]]'s declarative twin (parity tests only). */
-  def tokenSortJoinDeclarative(c: Column): Column = array_join(array_sort(tokens(c)), " ")
 
   def tokenSortRatio(a: Column, b: Column): Column =
     ratio(tokenSortJoin(a), tokenSortJoin(b))
 
   /** Sorted distinct token array — precompute ONCE per side before a
     * similarity join so the per-pair work is only set ops + levenshtein.
-    * Kernel expression; declarative twin below. */
+    * Kernel expression; declarative twin in the test tree
+    * (SimilarityTwin). */
   def tokenSet(c: Column): Column = graft.plans.TokenExprs.tokenSet(c)
-
-  /** [[tokenSet]]'s declarative twin (parity tests only). */
-  def tokenSetDeclarative(c: Column): Column = array_sort(array_distinct(tokens(c)))
 
   /** token_set_ratio over precomputed [[tokenSet]] arrays: max ratio over
     * {intersection, intersection+restA, intersection+restB} joins.
     * Kernel expression (the per-pair set-op merge + banded levenshtein
     * of [[graft.plans.FuzzyBestScore]] at floor 0); ASCII-domain
     * contract as [[sql.ratio]] — call sites feed normalizeName output.
-    * A null set scores 100, as in the declarative twin (whose set-op
-    * strings all null out, leaving `greatest(null, null, ratio("",""))`);
-    * the kernel itself propagates null. */
+    * A null set scores 100, as in the declarative twin (test tree,
+    * SimilarityTwin; its set-op strings all null out, leaving
+    * `greatest(null, null, ratio("",""))`); the kernel itself
+    * propagates null. */
   def tokenSetRatioFromSets(ta: Column, tb: Column): Column =
     coalesce(graft.plans.TokenExprs.tokenSetRatio100(ta, tb), lit(100))
-
-  /** [[tokenSetRatioFromSets]]'s declarative twin (parity tests only). */
-  def tokenSetRatioFromSetsDeclarative(ta: Column, tb: Column): Column = {
-    val inter = array_join(array_sort(array_intersect(ta, tb)), " ")
-    val restA = array_join(array_sort(array_except(ta, tb)), " ")
-    val restB = array_join(array_sort(array_except(tb, ta)), " ")
-    val t1 = trim(concat_ws(" ", inter, restA))
-    val t2 = trim(concat_ws(" ", inter, restB))
-    greatest(ratio(inter, t1), ratio(inter, t2), ratio(t1, t2))
-  }
 
   def tokenSetRatio(a: Column, b: Column): Column =
     tokenSetRatioFromSets(tokenSet(a), tokenSet(b))

@@ -22,15 +22,12 @@ object TextStats {
   private def toks(text: Column): Column = split(text, " ")
 
   /** Token hits against a wordlist (with multiplicity). Kernel
-    * expression — the declarative filter below is a HOF whose lambda
-    * runs interpreted per token per row (and classify's argmax inlines
-    * it once per class comparison); twin pinned in TextStatsSpec. */
+    * expression — the declarative twin (test tree, TextStatsTwin) is a
+    * `filter` HOF whose lambda runs interpreted per token per row (and
+    * classify's argmax would inline it once per class comparison);
+    * twin pinned in TextStatsSpec. */
   def wordlistHits(text: Column, words: Seq[String]): Column =
     graft.plans.TokenExprs.wordlistHits(text, words)
-
-  /** [[wordlistHits]]'s declarative twin (parity tests only). */
-  def wordlistHitsDeclarative(text: Column, words: Seq[String]): Column =
-    size(filter(toks(text), t => t.isin(words: _*)))
 
   /** Class label by argmax of wordlist hits (ties → earlier class). */
   def classify(text: Column): Column = {

@@ -15,15 +15,11 @@ import org.apache.spark.sql.functions._
 object Vectors {
 
   /** Dot product with elementwise double promotion — native expression
-    * ([[graft.plans.VecDot]]), bit-identical to [[dotDeclarative]]
-    * (same promote-then-multiply, same sequential fold order;
-    * VectorsSpec property-checks). */
+    * ([[graft.plans.VecDot]]), bit-identical to the declarative
+    * `aggregate(zip_with(...))` chain the DuckDB oracle mirrors (same
+    * promote-then-multiply, same sequential fold order; VectorsSpec
+    * property-checks it against the test tree's VectorsTwin). */
   def dot(a: Column, b: Column): Column = graft.plans.VecExprs.dot(a, b)
-
-  /** Declarative twin the DuckDB oracle mirrors. */
-  def dotDeclarative(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 

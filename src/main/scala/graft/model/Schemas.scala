@@ -5,67 +5,6 @@ import org.apache.spark.sql.functions.{col, expr, unix_micros}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-/** Typed data model for the engine.
-  *
-  * Mirrors the reference's four relational tables (reference
-  * `sql/schema.sql:4-49`) as Spark case classes + explicit StructTypes
-  * (SURVEY.md §1.2/§1.4). ABN stays a string key (leading zeros matter,
-  * `sql/schema.sql:15`); `merged_confidence` is an INT 0-100 similarity
-  * score (`sql/schema.sql:40`).
-  */
-object Schemas {
-
-  /** reference `sql/schema.sql:13-24` */
-  final case class AbrRecord(
-      abn: String,
-      entity_name: Option[String],
-      entity_type: Option[String],
-      entity_status: Option[String],
-      address: Option[String],
-      postcode: Option[String],
-      state: Option[String],
-      start_date: Option[java.sql.Date])
-
-  /** reference `sql/schema.sql:4-10` */
-  final case class CcRecord(
-      website_url: Option[String],
-      company_name: Option[String],
-      industry: Option[String])
-
-  /** reference `sql/schema.sql:27-42` — ABR columns + matched CC columns. */
-  final case class UnifiedCompany(
-      abn: String,
-      entity_name: Option[String],
-      entity_type: Option[String],
-      entity_status: Option[String],
-      address: Option[String],
-      postcode: Option[String],
-      state: Option[String],
-      start_date: Option[java.sql.Date],
-      website_url: Option[String],
-      company_name: Option[String],
-      industry: Option[String],
-      merged_confidence: Int)
-
-  /** reference `sql/schema.sql:45-49` — incremental-processing ledger. */
-  final case class ProcessedFile(file_path: String, processed_at: java.sql.Timestamp)
-
-  val abrSchema: StructType = StructType(Seq(
-    StructField("abn", StringType, nullable = false),
-    StructField("entity_name", StringType),
-    StructField("entity_type", StringType),
-    StructField("entity_status", StringType),
-    StructField("address", StringType),
-    StructField("postcode", StringType),
-    StructField("state", StringType),
-    StructField("start_date", DateType)))
-
-  val ccSchema: StructType = StructType(Seq(
-    StructField("website_url", StringType),
-    StructField("company_name", StringType),
-    StructField("industry", StringType)))
-}
-
 /** Session-keyed stage registry: the one owner of every intermediate
   * several queries of a session share — loaded relations, the minhash
   * signature/pair/label frames, the bucketed stores, the match and

@@ -140,41 +140,29 @@ object Dedup {
     * per ingest batch the work is O(batch + collisions), not O(corpus),
     * which is what makes continuous dedup feasible at 100 TB. Emits
     * new-vs-old and new-vs-new pairs; old-vs-old pairs never regenerate.
-    * Ids must be unique across `incoming` ∪ `existingSigs`.
+    * Ids must be unique across `incoming` ∪ `existingSigs` (one row per
+    * id: a [[graft.sources.StoreManifest]] store read or a write-once
+    * artifact); a repeated id verifies its pairs once per copy.
     * Output: id_a < id_b, jaccard100 (same contract as [[minhashPairs]]).
     */
   def incrementalMinhashPairs(incoming: DataFrame, existingSigs: DataFrame,
                               idCol: String, textCol: String,
                               shingleK: Int, numHashes: Int, bands: Int,
-                              minJaccard100: Int,
-                              uniqueIds: Boolean = false): DataFrame = {
+                              minJaccard100: Int): DataFrame = {
     val newSigs = graft.operators.Materialize.once( // see minhashPairs
       minhashSignatures(incoming, idCol, textCol, shingleK, numHashes, bands))
-    incrementalPairsFromSigs(newSigs, existingSigs, idCol, bands, minJaccard100,
-      uniqueIds)
+    incrementalPairsFromSigs(newSigs, existingSigs, idCol, bands, minJaccard100)
   }
 
   /** [[incrementalMinhashPairs]] with the batch signatures already
     * computed — the streaming driver uses this so one signature pass
-    * feeds both the pair join and the store append.
-    *
-    * `uniqueIds = true` asserts the caller's store guarantees at most
-    * one row per id (a manifest-managed store — [[graft.sources
-    * .StoreManifest]] — or a write-once bucketed artifact): the
-    * mid-compaction duplicate SHIELD (`dropDuplicates` on the verify
-    * side, an extra exchange of the wide `sh` rows) is skipped. The
-    * default keeps the shield for unmanaged directory piles, whose
-    * root-scan can observe a snapshot and its folded partitions
-    * together. */
+    * feeds both the pair join and the store append. Same input
+    * contract: ids unique across `newSigs` ∪ `existingSigs`. */
   def incrementalPairsFromSigs(newSigs: DataFrame, existingSigs: DataFrame,
                                idCol: String, bands: Int,
-                               minJaccard100: Int,
-                               uniqueIds: Boolean = false): DataFrame = {
-    // verify only ids that appear in a candidate pair, deduped by id —
-    // a store read taken mid-compaction (snapshot written, folded
-    // partitions not yet deleted) holds each folded row twice, and
-    // without the dedup every such pair would verify into two output
-    // rows; the semi-join bounds the dedup to O(pairs), not O(store).
+                               minJaccard100: Int): DataFrame = {
+    // verify only ids that appear in a candidate pair: the semi-join
+    // bounds the verify side to O(pairs), not O(store).
     // The pair list feeds BOTH the semi-join and the verify join, so
     // materialize it once: without it Catalyst recomputes the banded
     // candidate join per consumer, which measured 3x on every
@@ -185,10 +173,9 @@ object Dedup {
       incrementalCandidatePairs(newSigs, existingSigs, idCol, bands))
     val pairIds = pairs.select(col("id_a").as(idCol))
       .unionByName(pairs.select(col("id_b").as(idCol))).distinct()
-    val allSh0 = existingSigs.select(col(idCol), col("sh"))
+    val allSh = existingSigs.select(col(idCol), col("sh"))
       .unionByName(newSigs.select(col(idCol), col("sh")))
       .join(pairIds, Seq(idCol), "left_semi")
-    val allSh = if (uniqueIds) allSh0 else allSh0.dropDuplicates(idCol)
     val shA = allSh.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
     val shB = allSh.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
     shB.join(shA.join(pairs, "id_a"), "id_b")
@@ -213,25 +200,23 @@ object Dedup {
     * against the exact-Jaccard verifier.
     *
     * `existingSigs`/`newSigs` need only (id, sig, band_*): pass
-    * [[sigOnly]] projections. Output: id_a < id_b, n_agree,
+    * [[sigOnly]] projections; ids unique across both, as in
+    * [[incrementalPairsFromSigs]]. Output: id_a < id_b, n_agree,
     * sig_agree100 (= floor(100 × n_agree / numHashes)).
     */
   def incrementalPairsBySig(newSigs: DataFrame, existingSigs: DataFrame,
                             idCol: String, numHashes: Int, bands: Int,
-                            minAgree100: Int,
-                            uniqueIds: Boolean = false): DataFrame = {
-    // same mid-compaction duplicate shield as the exact-Jaccard path
-    // (and the same `uniqueIds` opt-out for manifest-managed or
-    // write-once stores), with the same once-materialized pair list
-    // (two consumers; master-aware — see [[Materialize.once]])
+                            minAgree100: Int): DataFrame = {
+    // same semi-join and once-materialized pair list as the
+    // exact-Jaccard path (two consumers; master-aware — see
+    // [[Materialize.once]])
     val pairs = Materialize.once(
       incrementalCandidatePairs(newSigs, existingSigs, idCol, bands))
     val pairIds = pairs.select(col("id_a").as(idCol))
       .unionByName(pairs.select(col("id_b").as(idCol))).distinct()
-    val allSig0 = existingSigs.select(col(idCol), col("sig"))
+    val allSig = existingSigs.select(col(idCol), col("sig"))
       .unionByName(newSigs.select(col(idCol), col("sig")))
       .join(pairIds, Seq(idCol), "left_semi")
-    val allSig = if (uniqueIds) allSig0 else allSig0.dropDuplicates(idCol)
     val sigA = allSig.select(col(idCol).as("id_a"), col("sig").as("sig_a"))
     val sigB = allSig.select(col(idCol).as("id_b"), col("sig").as("sig_b"))
     sigB.join(sigA.join(pairs, "id_a"), "id_b")
@@ -505,11 +490,12 @@ object Dedup {
     * buffers before sampling discarded most of it.
     *
     * Requires one row per `idCol` value (the natural fingerprint-table
-    * contract); duplicate ids duplicate `(id, fp)` pairs — the
-    * overlap counters downstream are duplicate-blind
-    * ([[winnowingOverlap]] counts DISTINCT shared fp values, the
-    * incremental path dedups `(id_a, id_b, fp)` before counting), but
-    * a store built from duplicate-id input wastes space. */
+    * contract); duplicate ids duplicate `(id, fp)` pairs.
+    * [[winnowingOverlap]] counts DISTINCT shared fp values and is
+    * blind to them, but the incremental path's `fpDfCap` counts rows:
+    * a store built from duplicate-id input over-counts df and drops
+    * fingerprints near the cap (see [[incrementalWinnowingOverlap]]'s
+    * input contract). */
   def winnowedFingerprints(df: DataFrame, idCol: String, textCol: String,
                            k: Int, w: Int): DataFrame = {
     require(w > 0, "need window w > 0")
@@ -753,28 +739,28 @@ object Dedup {
     * a batch member (DedupSpec proves it; the d17 oracle recomputes
     * it in full).
     *
+    * Input contract: ids unique across `incoming` ∪ the store's docs,
+    * and the store's (id, fp) rows distinct — [[winnowedFingerprints]]
+    * emits each fingerprint once per doc, so df is a plain row count.
+    *
     * Output: id_a < id_b, n_shared (≥ `minShared` distinct shared
     * fingerprint values).
     */
   def incrementalWinnowingOverlap(incoming: DataFrame, storeFps: DataFrame,
                                   idCol: String, textCol: String,
                                   k: Int, w: Int, minShared: Long,
-                                  fpDfCap: Long = 1000L,
-                                  uniqueFps: Boolean = false): DataFrame =
+                                  fpDfCap: Long = 1000L): DataFrame =
     incrementalWinnowingOverlapFromFps(
       Materialize.once(winnowedFingerprints(incoming, idCol, textCol, k, w)),
-      storeFps, idCol, minShared, fpDfCap, uniqueFps)
+      storeFps, idCol, minShared, fpDfCap)
 
   /** [[incrementalWinnowingOverlap]] over an already-computed (and
     * persisted/checkpointed) batch fingerprint table — the streaming
     * driver winnows once and feeds both the pairing and the store
-    * append here. `uniqueFps = true` asserts the store guarantees
-    * (id, fp) uniqueness (manifest-managed or write-once) and swaps the
-    * df shield's partial-distinct for a plain partial count. */
+    * append here. Same input contract. */
   def incrementalWinnowingOverlapFromFps(newFps: DataFrame, storeFps: DataFrame,
                                          idCol: String, minShared: Long,
-                                         fpDfCap: Long,
-                                         uniqueFps: Boolean = false): DataFrame = {
+                                         fpDfCap: Long): DataFrame = {
     // In-join store screen: only store rows whose fp occurs in the
     // BATCH can ever reach the pair join (the fp equi-join against
     // newFps kills every other row), and the df cap only matters for
@@ -798,15 +784,9 @@ object Dedup {
     // (df counts + pair join) beats checkpointing a corpus-sized frame
     val allFps = screenedStore
       .unionByName(newFps.select(col(idCol), col("fp")))
-    // df = DISTINCT docs per fp: a store read taken mid-compaction
-    // (snapshot written, folded partitions not yet deleted) holds each
-    // folded row twice — a plain count(*) would double those dfs and
-    // spuriously drop fps in (cap/2, cap]. Same shuffle volume: the
-    // partial distinct dedups (fp, id) map-side. On a store whose
-    // layout guarantees uniqueness the counts coincide and the cheaper
-    // plain count (no per-group hash set in the partial) suffices.
-    val dfOf = if (uniqueFps) count(lit(1)) else countDistinct(col(idCol))
-    val keep = allFps.groupBy(col("fp")).agg(dfOf.as("__df"))
+    // df = docs per fp: (id, fp) rows are distinct by the input
+    // contract, so a plain count (no per-group hash set in the partial)
+    val keep = allFps.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= fpDfCap).select(col("fp"))
     // the new side joins the pair join UNFILTERED: cappedAll is already
     // keep-restricted, so the fp equi-join enforces the cap on both

@@ -16,10 +16,10 @@ import graft.functions.Names
 /** Compact Catalyst expressions for the F-5..F-8 name operators
   * (reference scripts/entity_matching.py:43-153).
   *
-  * Value-identical to the declarative `regexp_replace`/`rlike` chains in
-  * [[graft.functions.Names]] (kept there as `*Declarative` twins and
-  * property-checked equal in NamesSpec) and to the DuckDB SQL the
-  * oracle runs — all three derive from the SAME pattern lists.
+  * Value-identical to the declarative `regexp_replace`/`rlike` chains
+  * over [[graft.functions.Names]]' pattern lists (the test tree's
+  * NamesTwin, property-checked equal in NamesSpec) and to the DuckDB
+  * SQL the oracle runs — all three derive from the SAME pattern lists.
   *
   * Why an expression and not the chain: Catalyst re-inlines a chained
   * alias into every consumer (filter pushdown substitutes it into each
@@ -48,7 +48,7 @@ private[graft] object NameRegex {
     Names.abbrevs.map { case (p, r) => Pattern.compile(p) -> r }.toArray
   val punct: Pattern = Pattern.compile("[^A-Za-z0-9 ]+")
   val ws: Pattern = Pattern.compile("\\s+")
-  // pre-upper ASCII projection — see normalizeNameDeclarative's doc:
+  // pre-upper ASCII projection — see Names.normalizeName's doc:
   // full case mappings (ß→SS vs ß→ẞ) differ between engines, so
   // non-ASCII must never reach upper
   val nonAscii: Pattern = Pattern.compile("[^\\x00-\\x7F]+")

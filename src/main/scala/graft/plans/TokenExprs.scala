@@ -16,16 +16,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * likewise per element).
   *
   * Each expression is value-identical to the declarative chain it
-  * replaces (kept as `*Declarative` twins in graft.functions.Similarity
-  * / graft.functions.Hashing and property-checked equal in
+  * replaces (kept as `*Declarative` twins in the test tree's
+  * SimilarityTwin / HashingTwin and property-checked equal in
   * SimilaritySpec/DedupSpec):
   *
   *  - [[TokenSortJoinExpr]] == `array_join(array_sort(split(c," ")), " ")`
   *  - [[TokenSetStrings]]   == `array_sort(array_distinct(split(c," ")))`
-  *  - [[CharNgramSet]]      == Hashing.charNgramsDeclarative (substr →
-  *    transform-gram → distinct → sort, with the short-string edge)
-  *  - [[TokenSetRatio100]]  == Similarity.tokenSetRatioFromSetsDeclarative
-  *    (greatest of the three set-op component ratios) on non-null sets
+  *  - [[CharNgramSet]]      == the char-n-gram chain: substr →
+  *    transform-gram → distinct → sort, with the short-string edge
+  *  - [[TokenSetRatio100]]  == the greatest of the three set-op
+  *    component ratios of the token-set-ratio chain, on non-null sets
   *
   * Exactness domains: splitting on the 0x20 byte equals regex-splitting
   * on " " for all valid UTF-8 (a space byte never occurs inside a

@@ -242,7 +242,7 @@ object DedupQueries {
         .select((col("doc_id") + 100000).as("doc_id"),
           concat(col("text"), lit(" zz qq ww")).as("text"))
       Dedup.incrementalMinhashPairs(incoming, docSigsDf(s, d),
-          "doc_id", "text", K, H, B, 50, uniqueIds = true)
+          "doc_id", "text", K, H, B, 50)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -262,8 +262,7 @@ object DedupQueries {
         graft.operators.Materialize.once(
           Dedup.minhashSignatures(incoming, "doc_id", "text", K, H, B)),
         "doc_id", B)
-      Dedup.incrementalPairsBySig(newSigs, store, "doc_id", H, B, 50,
-          uniqueIds = true)
+      Dedup.incrementalPairsBySig(newSigs, store, "doc_id", H, B, 50)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -296,7 +295,7 @@ object DedupQueries {
       // stages — the batch pays only its own hashing, banding
       // against the store, and the O(batch) contracted merge
       val batchPairs = Dedup.incrementalMinhashPairs(incoming, mutationSigsDf(s, d),
-        "doc_id", "text", K, H, B, 50, uniqueIds = true)
+        "doc_id", "text", K, H, B, 50)
       graft.operators.Components.mergeIncrementalClusters(
           dupClustersDf(s, d), batchPairs, "id_a", "id_b")
         .select(col("node").as("doc_id"), col("cluster").as("cluster_id"))
@@ -317,7 +316,7 @@ object DedupQueries {
         .select((col("doc_id") + 200000).as("doc_id"),
           concat(col("text"), lit(" rr ss")).as("text"))
       val batchPairs = Dedup.incrementalMinhashPairs(incoming, mutationSigsDf(s, d),
-        "doc_id", "text", K, H, B, 50, uniqueIds = true)
+        "doc_id", "text", K, H, B, 50)
       val base = dupClustersDf(s, d)
       val delta = graft.operators.Components.mergeIncrementalClustersDelta(
         base, batchPairs, "id_a", "id_b")
@@ -557,7 +556,7 @@ object DedupQueries {
             lit(" qq"), col("doc_id").cast("string")).as("text"))
       val store = Dedup.winnowedFingerprints(docs, "doc_id", "text", K, 4)
       Dedup.incrementalWinnowingOverlap(frags, store, "doc_id", "text",
-          k = K, w = 4, minShared = 3, fpDfCap = 100, uniqueFps = true)
+          k = K, w = 4, minShared = 3, fpDfCap = 100)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -613,12 +612,9 @@ object DedupQueries {
       val survivors = Dedup.incrementalSpanDedup(batch, store, "doc_id", "text", 16)
         .filter(col("n_spans_kept") > 0)
         .select(col("doc_id"), col("n_spans_kept"), col("clean_text"))
-      // uniqueIds: the store side is the shared write-once signature
-      // frame (one row per doc by construction) — the mid-compaction
-      // duplicate shield is for unmanaged directory piles
       val batchPairs = Dedup.incrementalMinhashPairs(
         survivors.select(col("doc_id"), col("clean_text").as("text")),
-        docSigsDf(s, d), "doc_id", "text", K, H, B, 50, uniqueIds = true)
+        docSigsDf(s, d), "doc_id", "text", K, H, B, 50)
       val merged = graft.operators.Components.mergeIncrementalClusters(
         plainLabelsDf(s, d), batchPairs, "id_a", "id_b")
       val labeled = survivors

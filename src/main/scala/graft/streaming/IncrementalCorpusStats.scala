@@ -25,9 +25,10 @@ import org.apache.spark.sql.types.StructType
   * Runs on [[MicroBatch]]: a replayed micro-batch overwrites its own
   * `batch_id=` partition instead of double-counting. The store keeps
   * its own layout rather than [[StoreCompaction]]'s: [[compactTo]]
-  * writes out of place, and its reserved `batch_id=-1` base means
-  * "folded through the `_compacted_upto` horizon", which the
-  * manifest's legacy migration would misread.
+  * folds into a NEW store directory (the stream continues against it),
+  * not a fresh snapshot name inside the same one, and its
+  * `_compacted_upto` marker — written last — is what publishes the fold
+  * and pins the as-of horizon [[resolveStats]] enforces.
   */
 object IncrementalCorpusStats {
 

@@ -44,25 +44,19 @@ object IncrementalDedup {
                        else fullSigs)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
+          // the store lists each batch directory once and replays
+          // overwrite their own, so ids are unique across batch ∪ store
+          // as long as the source never emits one id in two batches
+          // (the input contract the batch API states too)
           val existing = StoreCompaction.read(
-            s, sigStoreDir, newSigs.schema, ltBatch = batchId)
-          // uniqueIds: a duplicate-free resolve lists each batch
-          // directory exactly once, and replays overwrite their own
-          // batch dir — so an id appears once UNLESS the upstream
-          // source itself emits the same id in two distinct batches (an
-          // input-data contract, same as the batch API's). The verify-
-          // side dropDuplicates shield (an extra exchange of wide
-          // sig/sh rows) is skipped on that basis; it stays on for
-          // unmanaged piles and flagged legacy migrations
+            s, sigStoreDir, newSigs.schema, ltBatch = batchId).rows
           val pairs =
             if (verifyBySig)
               Dedup.incrementalPairsBySig(
-                newSigs, existing.rows, idCol, numHashes, bands, minJaccard100,
-                uniqueIds = existing.duplicateFree)
+                newSigs, existing, idCol, numHashes, bands, minJaccard100)
             else
               Dedup.incrementalPairsFromSigs(
-                newSigs, existing.rows, idCol, bands, minJaccard100,
-                uniqueIds = existing.duplicateFree)
+                newSigs, existing, idCol, bands, minJaccard100)
           pairs.write.mode("overwrite").parquet(s"$pairsOutDir/batch_id=$batchId")
           // append AFTER pairing: the batch must not see its own sigs
           // on the existing side (pairs would double via both orders)
@@ -119,16 +113,14 @@ object IncrementalDedup {
     * and commit that — losing every folded label. The fold refuses. */
   def compactLabels(spark: SparkSession, labelsDir: String,
                     uptoBatch: Long): Unit =
-    StoreCompaction.fold(spark, labelsDir, uptoBatch) { (folded, _) =>
+    StoreCompaction.fold(spark, labelsDir, uptoBatch) { folded =>
       resolveLabels(spark, labelsDir, ltBatch = uptoBatch + 1,
         idLike = folded.select(col("node")))
     }
 
-  /** Signature-store compaction ([[StoreCompaction.fold]]). Partitions
-    * are disjoint by id on a clean history; the by-id dedup absorbs the
-    * duplicates of a resolve that is not duplicate-free. */
+  /** Signature-store compaction ([[StoreCompaction.fold]]): batches
+    * are disjoint by id, so the snapshot is their rows. */
   def compactSigs(spark: SparkSession, sigStoreDir: String,
                   uptoBatch: Long): Unit =
-    StoreCompaction.fold(spark, sigStoreDir, uptoBatch)(
-      StoreCompaction.concat(df => df.dropDuplicates(df.columns.head)))
+    StoreCompaction.fold(spark, sigStoreDir, uptoBatch)(_.drop("batch_id"))
 }

@@ -49,7 +49,7 @@ object IncrementalSpanDedup {
     * newest batch never folds. */
   def compactStore(spark: SparkSession, storeDir: String,
                    uptoBatch: Long): Unit =
-    StoreCompaction.fold(spark, storeDir, uptoBatch)(StoreCompaction.concat(_.distinct()))
+    StoreCompaction.fold(spark, storeDir, uptoBatch)(_.drop("batch_id"))
 
   /** The span-hash membership set as of just before `ltBatch`. */
   def readStore(spark: SparkSession, storeDir: String,

@@ -50,7 +50,7 @@ object IncrementalSubstringScrub {
     * ([[StoreCompaction.fold]]); the newest batch never folds. */
   def compactStore(spark: SparkSession, storeDir: String,
                    uptoBatch: Long): Unit =
-    StoreCompaction.fold(spark, storeDir, uptoBatch)(StoreCompaction.concat(_.distinct()))
+    StoreCompaction.fold(spark, storeDir, uptoBatch)(_.drop("batch_id"))
 
   /** The gram-hash membership set as of just before `ltBatch`. */
   def readStore(spark: SparkSession, storeDir: String,

@@ -32,17 +32,15 @@ object IncrementalWinnowing {
               fpDfCap: Long = 1000L): Unit =
     MicroBatch.run(spark, schema, inputDir, idCol, textCol, checkpointDir) {
       (batch, batchId) =>
-        val store = StoreCompaction.read(batch.sparkSession, fpStoreDir,
-          storeSchema(idCol, schema(idCol).dataType), ltBatch = batchId)
+        val store = readStore(batch.sparkSession, fpStoreDir, idCol,
+          schema(idCol).dataType, ltBatch = batchId)
         // ONE winnowing pass (checkpointed inside the operator) feeds
         // both the pairing and the store delta
         val newFps = Dedup.winnowedFingerprints(batch, idCol, textCol, k, w)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // uniqueFps: a duplicate-free store read needs no distinct
-          // shield under the df count
-          Dedup.incrementalWinnowingOverlapFromFps(newFps, store.rows, idCol,
-              minShared, fpDfCap, uniqueFps = store.duplicateFree)
+          Dedup.incrementalWinnowingOverlapFromFps(newFps, store, idCol,
+              minShared, fpDfCap)
             .write.mode("overwrite").parquet(s"$pairsOutDir/batch_id=$batchId")
           // append AFTER pairing (the batch must not meet itself twice)
           StoreCompaction.commit(newFps, fpStoreDir, batchId)
@@ -50,12 +48,11 @@ object IncrementalWinnowing {
         ()
     }
 
-  /** Fingerprint-store compaction ([[StoreCompaction.fold]]).
-    * Partitions are disjoint by id on a clean history; `distinct`
-    * absorbs the duplicates of a resolve that is not duplicate-free. */
+  /** Fingerprint-store compaction ([[StoreCompaction.fold]]): batches
+    * are disjoint by id, so the snapshot is their rows. */
   def compactStore(spark: SparkSession, storeDir: String,
                    uptoBatch: Long): Unit =
-    StoreCompaction.fold(spark, storeDir, uptoBatch)(StoreCompaction.concat(_.distinct()))
+    StoreCompaction.fold(spark, storeDir, uptoBatch)(_.drop("batch_id"))
 
   /** The accumulated (id, fp) fingerprint table as of just before
     * `ltBatch`. `idType` shapes the empty first-batch frame — the

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import graft.streaming.{IncrementalDedup, IncrementalSpanDedup, IncrementalSubstringScrub, IncrementalWinnowing}
+import graft.streaming.{IncrementalDedup, IncrementalSpanDedup, IncrementalSubstringScrub, IncrementalWinnowing, StoreCompaction}
 
 /** Store compaction under the manifest layout
   * ([[graft.sources.StoreManifest]]) is snapshot-write → atomic
@@ -16,13 +16,10 @@ import graft.streaming.{IncrementalDedup, IncrementalSpanDedup, IncrementalSubst
   * directories may still exist but are unlisted, hence invisible).
   * These tests reconstruct both states deterministically and assert
   * every reader and consumer resolves the SAME result as
-  * before/after the compaction: old or new, never a mix.
-  *
-  * The final test additionally pins the LEGACY (pre-manifest,
-  * root-scanning) tolerance: raw root scans of the mid-window union
-  * still resolve correctly because the operators' default shields
-  * (df caps count DISTINCT docs; verification dedups by id after the
-  * pair semi-join) absorb the doubled rows. */
+  * before/after the compaction: old or new, never a mix. The
+  * consumers count and verify rows as they come (df is a plain count,
+  * verification has no by-id dedup), so a read that saw both the
+  * snapshot and its folded directories would change their output. */
 class CompactionWindowSpec extends SparkSpec {
   import spark.implicits._
 
@@ -143,8 +140,8 @@ class CompactionWindowSpec extends SparkSpec {
     }
     // docs 1/2 share the "p q r s" run: its winnowed fingerprint has
     // df = 2 in the store — at fpDfCap = 3 the probe (df -> 3) keeps
-    // it cleanly, while mid-window doubling (df -> 5) would drop it
-    // under a duplicate-counting cap
+    // it, while a read that doubled the folded rows (df -> 5) would
+    // drop it
     ingest(1L -> "p q r s t", 2L -> "z p q r s w")
     ingest(4L -> "a b c d e")
 
@@ -197,7 +194,10 @@ class CompactionWindowSpec extends SparkSpec {
     ingest(1L -> base, 2L -> (base + " tail"))
     ingest(3L -> "unrelated words only here nothing shared")
 
-    def storeDf(dir: String) = spark.read.parquet(dir).drop("batch_id")
+    val sigSchema = Dedup.minhashSignatures(Seq((0L, "x")).toDF("doc_id", "text"),
+      "doc_id", "text", 3, 16, 4).schema
+    def storeDf(dir: String) =
+      StoreCompaction.read(spark, dir, sigSchema, ltBatch = Long.MaxValue).rows
     def probePairs(dir: String): Seq[String] = {
       val probe = Seq((9L, base + " coda")).toDF("doc_id", "text")
       val newSigs = Dedup.minhashSignatures(probe, "doc_id", "text", 3, 16, 4)

@@ -111,7 +111,7 @@ class DedupSpec extends SparkSpec {
     for (k <- Seq(1, 2, 3, 7)) {
       val bad = edges.union(corpus).select(
           graft.functions.Hashing.shingles($"text", k).as("nat"),
-          graft.functions.Hashing.shinglesDeclarative($"text", k).as("dec"))
+          graft.functions.HashingTwin.shinglesDeclarative($"text", k).as("dec"))
         .filter(!($"nat" <=> $"dec")).count()
       assert(bad == 0, s"wordShingles($k) diverged from twin")
     }
@@ -125,7 +125,7 @@ class DedupSpec extends SparkSpec {
       val bad = texts.select(
           graft.plans.ShingleHashes64.column($"text", k).as("nat"),
           graft.functions.Hashing.shingleHashes(
-            graft.functions.Hashing.shinglesDeclarative($"text", k)).as("dec"))
+            graft.functions.HashingTwin.shinglesDeclarative($"text", k)).as("dec"))
         .filter($"nat" =!= $"dec").count()
       assert(bad == 0, s"shingle hashes diverge at k=$k")
     }
@@ -327,7 +327,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("charNgrams kernel bitwise-equals the declarative twin (corpus + edges)") {
-    import graft.functions.Hashing
+    import graft.functions.{Hashing, HashingTwin}
     // edges: null, empty, shorter-than-n, exactly n, multi-byte UTF-8
     // (code-point substr semantics), longer than maxLen, space runs,
     // all-duplicate grams
@@ -339,7 +339,7 @@ class DedupSpec extends SparkSpec {
     for ((n, maxLen) <- Seq((3, 60), (1, 5), (4, 4))) {
       val mismatched = edges.union(corpus).select(
         Hashing.charNgrams($"t", n, maxLen).as("k"),
-        Hashing.charNgramsDeclarative($"t", n, maxLen).as("d"))
+        HashingTwin.charNgramsDeclarative($"t", n, maxLen).as("d"))
         .filter(!($"k" <=> $"d"))
       assert(mismatched.count() == 0, s"charNgrams($n, $maxLen) diverged from twin")
     }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.Names
+import graft.functions.{Names, NamesTwin}
 
 /** Goldens replicate the reference chain by hand
   * (scripts/entity_matching.py:74-97) — pattern ORDER is load-bearing. */
@@ -99,13 +99,13 @@ class NamesSpec extends SparkSpec {
       .unionByName(gen.toDF("x"))
     val bad = corpus.select($"x",
         Names.normalizeName($"x").as("n_nat"),
-        Names.normalizeNameDeclarative($"x").as("n_dec"),
+        NamesTwin.normalizeNameDeclarative($"x").as("n_dec"),
         Names.keywordsArr($"x").as("k_nat"),
-        Names.keywordsArrDeclarative($"x").as("k_dec"),
+        NamesTwin.keywordsArrDeclarative($"x").as("k_dec"),
         Names.extractFromTitle($"x").as("e_nat"),
-        Names.extractFromTitleDeclarative($"x").as("e_dec"),
+        NamesTwin.extractFromTitleDeclarative($"x").as("e_dec"),
         Names.isValidCompanyName($"x").as("v_nat"),
-        Names.isValidCompanyNameDeclarative($"x").as("v_dec"))
+        NamesTwin.isValidCompanyNameDeclarative($"x").as("v_dec"))
       .filter($"n_nat" =!= $"n_dec" || ($"k_nat" =!= $"k_dec") ||
         !($"e_nat" <=> $"e_dec") || $"v_nat" =!= $"v_dec")
       .collect()

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.Similarity
+import graft.functions.{Similarity, SimilarityTwin}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -46,9 +46,9 @@ class SimilaritySpec extends SparkSpec {
     val all = edges.union(corpus)
     val mismatched = all.select(
       Similarity.tokenSortJoin($"t").as("ks"),
-      Similarity.tokenSortJoinDeclarative($"t").as("ds"),
+      SimilarityTwin.tokenSortJoinDeclarative($"t").as("ds"),
       Similarity.tokenSet($"t").as("kt"),
-      Similarity.tokenSetDeclarative($"t").as("dt"))
+      SimilarityTwin.tokenSetDeclarative($"t").as("dt"))
       .filter(!($"ks" <=> $"ds") || !($"kt" <=> $"dt"))
     assert(mismatched.count() == 0)
   }
@@ -62,7 +62,7 @@ class SimilaritySpec extends SparkSpec {
       .crossJoin(names.select(Similarity.tokenSet($"n").as("tb")).limit(23))
     val mismatched = pairs.select(
       Similarity.tokenSetRatioFromSets($"ta", $"tb").as("k"),
-      Similarity.tokenSetRatioFromSetsDeclarative($"ta", $"tb").as("d"))
+      SimilarityTwin.tokenSetRatioFromSetsDeclarative($"ta", $"tb").as("d"))
       .filter(!($"k" <=> $"d"))
     assert(mismatched.count() == 0)
     // the null edge both forms score 100 (see TokenSetRatio100 scaladoc)
@@ -71,7 +71,7 @@ class SimilaritySpec extends SparkSpec {
     val r = nullEdge.select(
       Similarity.tokenSetRatioFromSets($"ta", $"tb").as("k"),
       Similarity.tokenSetRatioFromSets($"tb", $"ta").as("k2"),
-      Similarity.tokenSetRatioFromSetsDeclarative($"ta", $"tb").as("d")).head()
+      SimilarityTwin.tokenSetRatioFromSetsDeclarative($"ta", $"tb").as("d")).head()
     assert(r.getInt(0) == 100 && r.getInt(1) == 100 && r.getInt(2) == 100)
   }
 
@@ -82,7 +82,7 @@ class SimilaritySpec extends SparkSpec {
     def run() = sets.select(
       graft.plans.TokenExprs.tokenSetRatio100($"ta", $"tb").as("kernel"),
       Similarity.tokenSetRatioFromSets($"ta", $"tb").as("boundary"),
-      Similarity.tokenSetRatioFromSetsDeclarative($"ta", $"tb").as("twin")).collect()
+      SimilarityTwin.tokenSetRatioFromSetsDeclarative($"ta", $"tb").as("twin")).collect()
     for (rows <- Seq(run(), {
       spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
       try run() finally spark.conf.unset("spark.sql.codegen.factoryMode")

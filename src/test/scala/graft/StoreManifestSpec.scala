@@ -20,7 +20,6 @@ class StoreManifestSpec extends SparkSpec {
   test("unmanaged until first commit; commitBatch is idempotent") {
     val dir = tmp()
     assert(StoreManifest.resolve(spark, dir).isEmpty)
-    assert(StoreManifest.legacyNames(spark, dir).isEmpty)
     writeBatch(dir, 0, Seq(1L, 2L))
     StoreManifest.commitBatch(spark, dir, "batch_id=0")
     val m0 = StoreManifest.resolve(spark, dir).get
@@ -34,15 +33,96 @@ class StoreManifestSpec extends SparkSpec {
       Set("batch_id=0", "batch_id=1"))
   }
 
-  test("first contact migrates a legacy pile: manifest lists existing dirs") {
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Nil else t +: causes(t.getCause)
+
+  /** `body` throws (directly, or as the cause of a streaming query's
+    * failure) an IllegalStateException that names the store, its two
+    * unlisted dirs and the deliberate-adoption route. */
+  private def refusesPile(dir: String)(body: => Any): Unit = {
+    val e = intercept[Exception](body)
+    val ise = causes(e).collectFirst { case i: IllegalStateException => i }
+    assert(ise.isDefined, s"expected an IllegalStateException, got $e")
+    val msg = ise.get.getMessage
+    assert(msg.contains(dir) && msg.contains("batch_id=0") &&
+      msg.contains("batch_id=1") && msg.contains("StoreManifest.publish"), msg)
+  }
+
+  test("an unmanaged pile fails loud on commit, read, fold, run") {
+    // older batch dirs with no manifest: no engine writer leaves this
+    // shape, so nothing says which dirs are complete or disjoint
+    def pile(): String = {
+      val dir = tmp()
+      writeBatch(dir, 0, Seq(1L))
+      writeBatch(dir, 1, Seq(2L))
+      dir
+    }
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("v", org.apache.spark.sql.types.LongType)
+    val committed = pile()
+    writeBatch(committed, 2, Seq(3L))
+    refusesPile(committed)(StoreManifest.commitBatch(spark, committed, "batch_id=2"))
+    assert(StoreManifest.resolve(spark, committed).isEmpty, "nothing was published")
+    val read = pile()
+    refusesPile(read)(graft.streaming.StoreCompaction.read(spark, read, schema, ltBatch = 5))
+    val folded = pile()
+    refusesPile(folded)(
+      graft.streaming.StoreCompaction.fold(spark, folded, uptoBatch = 0)(_.drop("batch_id")))
+    assert(!Files.exists(java.nio.file.Paths.get(folded, "batch_id=-1")),
+      "no snapshot was written")
+
+    // an unlisted dir at or above the reading batch is that batch's own
+    // failed first attempt (see StreamingSpec's first-batch crash test):
+    // only the older one is refused
+    val partial = intercept[IllegalStateException](
+      graft.streaming.StoreCompaction.read(spark, pile(), schema, ltBatch = 1))
+    assert(partial.getMessage.contains("batch_id=0") &&
+      !partial.getMessage.contains("batch_id=1"), partial.getMessage)
+
+    // the streaming operator, whose signature store lost its manifest
+    // after two committed batches: the third batch refuses the pile
+    val root = Files.createTempDirectory("graft-manifest-run")
+    val in = root.resolve("in").toString
+    val sigs = root.resolve("sigs").toString
+    val pairs = root.resolve("pairs")
+    def runBatch(rows: Seq[(Long, String)]): Unit = {
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
+      graft.streaming.IncrementalDedup.runOnce(spark,
+        spark.read.parquet(in).schema, in, "doc_id", "text", sigs,
+        pairs.toString, root.resolve("ckpt").toString)
+    }
+    runBatch(Seq(1L -> "alpha beta gamma delta"))
+    runBatch(Seq(2L -> "one two three four"))
+    deleteRecursively(java.nio.file.Paths.get(sigs, "_manifest"))
+    refusesPile(sigs)(runBatch(Seq(3L -> "alpha beta gamma delta epsilon")))
+    assert(!Files.exists(pairs.resolve("batch_id=2")),
+      "the batch emitted no pairs against the refused store")
+  }
+
+  private def deleteRecursively(p: java.nio.file.Path): Unit =
+    Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => Files.delete(f))
+
+  test("a root whose only batch dir is the one being committed commits it") {
+    // the bootstrap shape: a corpus snapshot written as batch_id=-1
+    // into an empty root, then committed
     val dir = tmp()
-    writeBatch(dir, 0, Seq(1L))
-    writeBatch(dir, 1, Seq(2L))
-    // legacy pile, no manifest — a new batch commit adopts the history
-    writeBatch(dir, 2, Seq(3L))
-    StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
-      Set("batch_id=0", "batch_id=1", "batch_id=2"))
+    writeBatch(dir, -1, Seq(1L, 2L))
+    StoreManifest.commitBatch(spark, dir, "batch_id=-1")
+    assert(StoreManifest.resolve(spark, dir).get.dirs == Seq("batch_id=-1"))
+    assert(readLive(dir).select($"v").as[Long].collect().toSet == Set(1L, 2L))
+  }
+
+  test("a version carrying a flag line fails resolve loudly") {
+    // `!dupes-upto=` was the retired migration's duplicate-possible
+    // horizon: a listing that carries it cannot be read as duplicate-free
+    val dir = tmp()
+    writeBatch(dir, 0, Seq(1L)); StoreManifest.commitBatch(spark, dir, "batch_id=0")
+    Files.write(java.nio.file.Paths.get(dir, "_manifest", f"v${1L}%020d"),
+      "!dupes-upto=2\nbatch_id=0".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val e = intercept[IllegalStateException](StoreManifest.resolve(spark, dir))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("!dupes-upto=2"),
+      e.getMessage)
   }
 
   test("readLive sees exactly the listed dirs; unlisted dirs are invisible") {
@@ -90,104 +170,6 @@ class StoreManifestSpec extends SparkSpec {
       add = Seq("batch_id=-1"))
     assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
       Set("batch_id=-1", "batch_id=1"))
-  }
-
-  test("legacy migration resolves an interrupted old-style compaction") {
-    // crash window of the PRE-manifest layout: snapshot written and
-    // committed, folded partitions not yet deleted — listing both
-    // would bake every folded row into the manifest twice, forever,
-    // while the clean resolve simultaneously disables consumers' dup shields
-    val dir = tmp()
-    writeBatch(dir, 0, Seq(1L))
-    writeBatch(dir, 1, Seq(2L))
-    writeBatch(dir, -1, Seq(1L)) // snapshot folding batch 0 (complete)
-    writeBatch(dir, 2, Seq(3L))
-    StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
-      Set("batch_id=-1", "batch_id=1", "batch_id=2"),
-      "complete snapshot supersedes its folded inputs")
-    val vals = readLive(dir)
-      .select($"v").as[Long].collect().toSeq.sorted
-    assert(vals == Seq(1L, 2L, 3L), s"each row exactly once: $vals")
-  }
-
-  test("legacy migration ignores an incomplete snapshot; positive dirs need no _SUCCESS") {
-    val dir = tmp()
-    writeBatch(dir, 0, Seq(1L))
-    writeBatch(dir, 1, Seq(2L))
-    writeBatch(dir, -1, Seq(1L)) // the crashed snapshot write itself
-    Files.delete(java.nio.file.Paths.get(dir, "batch_id=-1", "_SUCCESS"))
-    // a crashed POSITIVE batch write is replayed/overwritten by the
-    // at-least-once stream — it stays listed
-    Files.delete(java.nio.file.Paths.get(dir, "batch_id=1", "_SUCCESS"))
-    writeBatch(dir, 2, Seq(3L))
-    StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
-      Set("batch_id=0", "batch_id=1", "batch_id=2"),
-      "incomplete snapshot excluded; its intact folded inputs carry the data")
-  }
-
-  test("legacy migration: the deepest fold horizon wins") {
-    val dir = tmp()
-    writeBatch(dir, -1, Seq(1L)) // shallow snapshot (folded batch 0)
-    writeBatch(dir, -2, Seq(1L, 2L)) // deeper snapshot (folded 0 and 1, incl. -1)
-    writeBatch(dir, 2, Seq(3L))
-    StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    assert(StoreManifest.resolve(spark, dir).get.dirs.toSet ==
-      Set("batch_id=-2", "batch_id=2"),
-      "the most negative complete snapshot folded everything at or below its horizon")
-  }
-
-  test("ambiguous legacy state (fixed -1 snapshot + survivors) flags dupes until a full-range fold") {
-    // The OLD (pre-manifest) compactor wrote its snapshot at the
-    // RESERVED name batch_id=-1 whatever horizon it folded. This pile
-    // is that compactor interrupted after folding batches 0..1: the
-    // snapshot holds their rows AND batch_id=1 still exists. Nothing
-    // on disk records the horizon, so migration must keep both sides
-    // (lossless) and carry a duplicate-possible flag that keeps
-    // consumer shields on — silently claiming uniqueness here would
-    // double batch 1's rows in every downstream pair/count.
-    val dir = tmp()
-    writeBatch(dir, -1, Seq(1L, 2L)) // folded rows of batches 0 and 1
-    writeBatch(dir, 0, Seq(1L))
-    writeBatch(dir, 1, Seq(2L))
-    writeBatch(dir, 2, Seq(3L))
-    StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    val m = StoreManifest.resolve(spark, dir).get
-    assert(m.dirs.toSet == Set("batch_id=-1", "batch_id=1", "batch_id=2"))
-    assert(m.dupesUpto.contains(2L) && !m.duplicateFree,
-      s"ambiguous -1 snapshot must flag ids <= max surviving positive: $m")
-    val vals = readLive(dir)
-      .select($"v").as[Long].collect().toSeq.sorted
-    assert(vals == Seq(1L, 2L, 2L, 3L),
-      s"lossless listing duplicates batch 1's row, never drops it: $vals")
-    // later commits inherit the flag — the suspect range is still listed
-    writeBatch(dir, 3, Seq(4L))
-    StoreManifest.commitBatch(spark, dir, "batch_id=3")
-    assert(StoreManifest.resolve(spark, dir).get.dupesUpto.contains(2L))
-    // a fold BELOW the horizon dedupes its own snapshot but keeps the
-    // flag: batch_id=2 (<= horizon) still listed, still suspect
-    graft.streaming.IncrementalSpanDedup.compactStore(spark, dir, uptoBatch = 1)
-    val partial = StoreManifest.resolve(spark, dir).get
-    assert(partial.dupesUpto.contains(2L), s"partial fold must not clear: $partial")
-    // the fold THROUGH the horizon rewrites every suspect dir deduped
-    // and clears the flag — shields may drop from here on
-    graft.streaming.IncrementalSpanDedup.compactStore(spark, dir, uptoBatch = 2)
-    val after = StoreManifest.resolve(spark, dir).get
-    assert(after.duplicateFree, s"full-range fold must clear the flag: $after")
-    val deduped = readLive(dir)
-      .select($"v").as[Long].collect().toSeq.sorted
-    assert(deduped == Seq(1L, 2L, 3L, 4L), s"fold absorbed the duplicate: $deduped")
-  }
-
-  test("unambiguous legacy snapshot (horizon in the name) migrates without the flag") {
-    val dir = tmp()
-    writeBatch(dir, -2, Seq(1L, 2L)) // new naming: folded batches 0..1
-    writeBatch(dir, 2, Seq(3L))
-    StoreManifest.commitBatch(spark, dir, "batch_id=2")
-    val m = StoreManifest.resolve(spark, dir).get
-    assert(m.dirs.toSet == Set("batch_id=-2", "batch_id=2"))
-    assert(m.duplicateFree, s"named horizon is exact — no flag: $m")
   }
 
   test("old manifest versions are GC'd beyond the keep window") {

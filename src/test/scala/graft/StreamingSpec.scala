@@ -1088,6 +1088,46 @@ class StreamingSpec extends SparkSpec {
     assert(snap(labels) == labels1, "replayed label delta diverged")
   }
 
+  test("first-batch crash before the first manifest commit: the replay overwrites the leftover and commits it") {
+    // a driver that dies after writing batch_id=0 but before its
+    // commitBatch leaves each store an unlisted batch_id=0 and no
+    // _manifest; the restarted query replays batch 0, which must read
+    // the stores as empty, overwrite the leftovers and publish them
+    val root = Files.createTempDirectory("graft-firstcrash")
+    val in = root.resolve("in"); Files.createDirectories(in)
+    val sigs = root.resolve("sigs").toString
+    val pairs = root.resolve("pairs").toString
+    val labels = root.resolve("labels").toString
+    val ckpt = root.resolve("ckpt")
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+
+    Seq((1L, base), (2L, base + " tail"), (3L, "unrelated words only here"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in.toString)
+    val schema = spark.read.parquet(in.toString).select("doc_id", "text").schema
+    def run(ck: java.nio.file.Path): Unit =
+      IncrementalDedup.runOnce(spark, schema, in.toString, "doc_id", "text",
+        sigs, pairs, ck.toString, labelsStoreDir = Some(labels))
+    run(ckpt)
+    val pairs1 = snap(pairs)
+    val sigs1 = snap(sigs)
+    val labels1 = snap(labels)
+    assert(pairs1.nonEmpty && sigs1.nonEmpty && labels1.nonEmpty)
+
+    Seq(sigs, labels).foreach { d =>
+      val m = java.nio.file.Paths.get(d, "_manifest")
+      Files.walk(m).sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.delete(f))
+    }
+    run(cloneCkptWithoutCommit(ckpt))
+    assert(snap(pairs) == pairs1, "replayed dedup pairs diverged")
+    assert(snap(sigs) == sigs1, "replay double-appended the signature store")
+    assert(snap(labels) == labels1, "replayed label delta diverged")
+    Seq(sigs, labels).foreach { d =>
+      assert(graft.sources.StoreManifest.resolve(spark, d).map(_.dirs) ==
+        Some(Seq("batch_id=0")), s"$d must list its replayed batch")
+    }
+  }
+
   test("streaming span dedup replay: redelivered batch scrubs identically, store intact") {
     val root = Files.createTempDirectory("graft-spanreplay")
     val in = root.resolve("in"); Files.createDirectories(in)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Hashing, TextStats}
+import graft.functions.{Hashing, HashingTwin, TextStats, TextStatsTwin}
 
 class TextStatsSpec extends SparkSpec {
   import spark.implicits._
@@ -43,7 +43,7 @@ class TextStatsSpec extends SparkSpec {
     val words = TextStats.classes.head._2
     val bad = edges.union(corpus).select(
         TextStats.wordlistHits($"text", words).as("nh"),
-        TextStats.wordlistHitsDeclarative($"text", words).as("dh"),
+        TextStatsTwin.wordlistHitsDeclarative($"text", words).as("dh"),
         graft.plans.TokenExprs.sumTokenChars($"text").as("nl"),
         aggregate(split($"text", " "), lit(0L), (a, w) => a + length(w)).as("dl"))
       .filter(!($"nh" <=> $"dh") || !($"nl" <=> $"dl")).count()
@@ -60,7 +60,7 @@ class TextStatsSpec extends SparkSpec {
     for (maxLen <- Seq(1, 64)) {
       val bad = edges.union(corpus).select(
           Hashing.fingerprint($"text", maxLen).as("nat"),
-          Hashing.fingerprintDeclarative($"text", maxLen).as("dec"))
+          HashingTwin.fingerprintDeclarative($"text", maxLen).as("dec"))
         .filter(!($"nat" <=> $"dec")).count()
       assert(bad == 0, s"fingerprint($maxLen) diverged from twin")
     }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.Vectors
+import graft.functions.{Vectors, VectorsTwin}
 import graft.operators.SimilaritySearch
 
 class VectorsSpec extends SparkSpec {
@@ -26,7 +26,7 @@ class VectorsSpec extends SparkSpec {
     val pairs = e.join(shifted, "vec_id")
     val badDot = pairs.select(
         Vectors.dot($"embedding", $"other").as("nat"),
-        Vectors.dotDeclarative($"embedding", $"other").as("dec"))
+        VectorsTwin.dotDeclarative($"embedding", $"other").as("dec"))
       .filter(!($"nat" <=> $"dec")).count()
     assert(badDot == 0, "native dot diverges from declarative fold")
     val badLsh = e.select(
@@ -147,7 +147,7 @@ class VectorsSpec extends SparkSpec {
     val df = pairs.toDF("a", "b")
     val badDot = df.select(
         Vectors.dot($"a", $"b").as("nat"),
-        Vectors.dotDeclarative($"a", $"b").as("dec"))
+        VectorsTwin.dotDeclarative($"a", $"b").as("dec"))
       .filter(!($"nat" <=> $"dec")).collect()
     assert(badDot.isEmpty, s"dot diverged on: ${badDot.mkString("; ")}")
     val badLsh = df.select($"a",
