@@ -3,7 +3,7 @@
 # overhead): scripts/run_tool.sh <MainClass> [args...]
 # MEM=48g scripts/run_tool.sh graft.tools.ScaleRun ...
 set -euo pipefail
-CP="/root/repo/target/scala-2.13/classes"
+CP="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 for j in /opt/spark/jars/*.jar; do CP="$CP:$j"; done
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

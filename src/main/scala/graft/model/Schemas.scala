@@ -114,15 +114,21 @@ object Tables {
     df.withColumn("ts", epochMicros(df, "ts"))
   }
 
-  /** Fan a scan out across the session's parallelism: always a
-    * round-robin repartition to `spark.sql.shuffle.partitions`. The
-    * testdata tables are one parquet row-group each, so a scan feeds
-    * ONE task regardless of maxPartitionBytes; compute-heavy per-row
-    * operators (minhash, simhash, vector math) would otherwise run
-    * single-threaded. A scan that already yields many splits pays the
-    * same full shuffle anyway — nothing here checks the split count. */
-  def spread(df: DataFrame): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    df.repartition(n)
-  }
+  /** Fan a scan out by size, for per-row operators (minhash, simhash,
+    * vector math) over the testdata's single-row-group tables, whose
+    * scan is one task at any size: a round-robin rebalance whose read
+    * side AQE coalesces to partitions of at least
+    * `coalescePartitions.minPartitionSize` (1 MB) — one task under that
+    * size, every shuffle partition above it × `shuffle.partitions`. With
+    * AQE off (where Spark drops the hint) it is [[fanOut]]. */
+  def spread(df: DataFrame): DataFrame =
+    if (df.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean) df.hint("rebalance")
+    else fanOut(df)
+
+  /** A round-robin to every shuffle partition at any input size, for
+    * the inputs of the match scorers (j1, u1): their work is left rows ×
+    * candidate rows, which [[spread]]'s byte sizing does not see (u1 at
+    * sf0.1 ran 2.5× slower with its left side as one task). */
+  def fanOut(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
 }

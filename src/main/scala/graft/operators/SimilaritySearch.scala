@@ -60,7 +60,7 @@ object SimilaritySearch {
         .as(Seq("tbl", "bucket")))
     val qp = prep(queries, idCol, vecCol, "q")
     // cp feeds two subtrees (banding + the payload join-back) — without
-    // materialization the corpus scan, the spread repartition and the
+    // materialization the corpus scan, the spread rebalance and the
     // norm pass all run twice per call (the knnJoin idiom)
     val cp = Materialize.once(prep(corpus, idCol, vecCol, "c"))
     // slim-first: the multi-table collision dedup runs over a

@@ -25,16 +25,14 @@ object MatchQueries {
 
   /** Reference caps matching at ABR_FETCH_LIMIT=10000 rows (scripts/
     * entity_matching.py:38,377); made deterministic with an ordered
-    * limit, then repartitioned so the scoring fans back out. */
-  private def leftDf(s: SparkSession, d: String) = {
-    val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    t(s, d, "customer").select(col("c_custkey"), col("c_name"))
-      .orderBy(col("c_custkey")).limit(10000)
-      .repartition(n)
-  }
+    * limit, then fanned back out for the scoring. */
+  private def leftDf(s: SparkSession, d: String) =
+    graft.model.Tables.fanOut(
+      t(s, d, "customer").select(col("c_custkey"), col("c_name"))
+        .orderBy(col("c_custkey")).limit(10000))
 
   private def rightDf(s: SparkSession, d: String) =
-    graft.model.Tables.spread(
+    graft.model.Tables.fanOut(
       t(s, d, "customer").filter(col("c_custkey") % 7 === 0)
         .select(col("c_custkey").as("cand_key"), expr(candSql).as("cand_name")))
 

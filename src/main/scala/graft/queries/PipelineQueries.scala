@@ -46,13 +46,13 @@ object PipelineQueries {
       |END AS industry""".stripMargin)
 
   private def abrDf(s: SparkSession, d: String): DataFrame =
-    Tables.spread(Tables.load(s, d, "customer").selectExpr(abrCols: _*)
+    Tables.fanOut(Tables.load(s, d, "customer").selectExpr(abrCols: _*)
       .orderBy(col("abn")).limit(10000))
 
   private def ccDf(s: SparkSession, d: String): DataFrame =
-    // spread below the (pushed-down) cleaning predicates: the
+    // fan out below the (pushed-down) cleaning predicates: the
     // single-row-group scan would otherwise evaluate them on one task
-    Tables.spread(Tables.load(s, d, "customer").filter(col("c_custkey") % 7 === 0)
+    Tables.fanOut(Tables.load(s, d, "customer").filter(col("c_custkey") % 7 === 0)
       .selectExpr(ccCols: _*))
 
   /** Unified table shared per sfDir — it feeds both U-1 and U-2. */

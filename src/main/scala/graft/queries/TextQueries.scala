@@ -61,9 +61,11 @@ object TextQueries {
     // T-7: per-doc top-3 keywords by integer-exact TF-IDF rank —
     // vocabulary-sized doc-freq table broadcast back onto the linear
     // per-doc term counts
+    // not spread: tfidfTopK hash-distributes by id itself, and a spread
+    // under that repartition is not collapsed into it (a second exchange)
     "t7_tfidf_topk" -> ((s, d) =>
       graft.operators.CorpusStats.tfidfTopK(
-          t(s, d, "documents").select(col("doc_id"), col("text")),
+          Tables.load(s, d, "documents").select(col("doc_id"), col("text")),
           "doc_id", "text", k = 3)
         .orderBy(col("doc_id"), col("rk"))),
 

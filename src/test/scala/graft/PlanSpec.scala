@@ -157,10 +157,11 @@ class PlanSpec extends SparkSpec {
           case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
             exchanges(q.plan)
         }.flatten
-    // the round-robin Tables.spread fan-out legitimately carries text
-    // (it distributes the single-row-group scan and is a no-op decision
-    // on real multi-split tables); the HASH shuffles — distinct, join,
-    // aggregation, the ones that exist at 100 TB — must not
+    // the Tables.spread rebalance legitimately carries text (a round-
+    // robin exchange whose read side AQE sizes: one partition for this
+    // fixture's scan, every shuffle partition once each holds over
+    // 1 MB); the HASH shuffles — distinct, join, aggregation, the ones
+    // that exist at 100 TB — must not
     val exs = exchanges(df.queryExecution.executedPlan).filter(
       _.outputPartitioning.isInstanceOf[
         org.apache.spark.sql.catalyst.plans.physical.HashPartitioning])
