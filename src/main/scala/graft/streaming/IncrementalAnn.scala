@@ -57,10 +57,8 @@ object IncrementalAnn {
     if (refineBits > 0)
       graft.operators.BucketCap.requireIndependentFamilies(
         lshBits, lshTables, refineBits, lshTables)
-    val verified = requireStoreLayout(spark, codeStoreDir,
-      lshBits, lshTables, refineBits)
-    adoptStoreLayout(spark, codeStoreDir, lshBits, lshTables, refineBits,
-      unverified = !verified)
+    requireStoreLayout(spark, codeStoreDir, lshBits, lshTables, refineBits)
+    adoptStoreLayout(spark, codeStoreDir, lshBits, lshTables, refineBits)
     MicroBatch.run(spark, schema, inputDir, idCol, vecCol, checkpointDir) {
       (batch, batchId) =>
         val s = batch.sparkSession
@@ -164,15 +162,15 @@ object IncrementalAnn {
     *    probe's buckets from a different hyperplane family than the
     *    persisted ones, so stored and probe keys agree only by chance —
     *    same silent recall collapse, no schema signal at all.
-    * Stores from before the sidecar existed fall back to the only
-    * check their files support (`xbuckets` presence vs refineBits>0)
-    * and the current run's tuple is adopted as the recorded contract.
-    * One metadata read per [[runOnce]] call; within a run the single
-    * writer keeps the layout constant by construction. */
+    * A store that lists batches but has no `_layout` (deleted, or
+    * published by hand) fails loud: nothing in its files pins the
+    * geometry it was built with. One metadata read per [[runOnce]]
+    * call; within a run the single writer keeps the layout constant by
+    * construction. */
   private[graft] def requireStoreLayout(spark: SparkSession,
                                         codeStoreDir: String,
                                         lshBits: Int = 8, lshTables: Int = 4,
-                                        refineBits: Int): Boolean = {
+                                        refineBits: Int): Unit = {
     val root = new org.apache.hadoop.fs.Path(codeStoreDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val meta = new org.apache.hadoop.fs.Path(root, LayoutFile)
@@ -187,97 +185,30 @@ object IncrementalAnn {
           "family and refinement geometry are part of the store's layout " +
           "contract (bucket keys and extension signs are persisted, not " +
           "recomputable) and must stay constant for the store's lifetime")
-      return true
-    }
-    val paths = StoreCompaction.liveDirs(spark, codeStoreDir)
-    if (paths.nonEmpty) {
-      val stored = spark.read.parquet(paths: _*).schema.fieldNames
-        .contains("xbuckets")
-      require(stored == (refineBits > 0),
-        s"code store $codeStoreDir was written with refineBits " +
-          s"${if (stored) "> 0" else "= 0"} but this run sets " +
-          s"refineBits=$refineBits — refineBits is part of the store's " +
-          "layout contract (extension signs are persisted, not " +
-          "recomputable) and must stay constant for the store's lifetime")
-      // Pre-sidecar stores can only be checked for xbuckets PRESENCE —
-      // the lshBits/lshTables values (and the refineBits VALUE) this
-      // run declares cannot be verified against the files and are
-      // about to be adopted as the store's permanent contract. A wrong
-      // declaration here is the silent recall collapse the sidecar
-      // exists to prevent, on exactly this one first contact — say so
-      // loudly instead of trusting in silence.
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"code store $codeStoreDir predates the _layout sidecar: " +
-          s"adopting DECLARED geometry (lshBits=$lshBits, " +
-          s"lshTables=$lshTables, refineBits=$refineBits) as its " +
-          "permanent contract WITHOUT file-level verification — only " +
-          "xbuckets presence could be checked. If these values differ " +
-          "from the ones the store was built with, probe and stored " +
-          "bucket keys will agree only by chance and recall collapses " +
-          "silently; confirm the original run's configuration before " +
-          "trusting results from this store.")
-      return false // adopted, but NOT verified against the files
-    }
-    true // brand-new store: first-writer truth, nothing to verify
+    } else if (graft.sources.StoreManifest.live(spark, codeStoreDir).nonEmpty)
+      throw new IllegalStateException(
+        s"code store $codeStoreDir lists committed batches but has no " +
+          s"$LayoutFile; refusing to adopt this run's geometry unverified. " +
+          "To restore it deliberately, hand-check the lshBits, lshTables " +
+          "and refineBits the store was built with and write them to " +
+          s"$codeStoreDir/$LayoutFile as the three lines lshBits=<n>, " +
+          "lshTables=<n>, refineBits=<n> (no trailing newline)")
   }
-
-  private val ProvenanceFile = "_layout_provenance"
 
   /** Record the layout tuple as the store's contract if none is
     * recorded yet — called by [[runOnce]] AFTER [[requireStoreLayout]]
-    * passes, so the adopted values are either a brand-new store's
-    * first-writer truth or a pre-sidecar store's xbuckets-presence-
-    * checked declared configuration. Atomic create-then-rename; the
-    * single-writer contract makes the lost-race require a loud
-    * invariant.
-    *
-    * `unverified = true` (a non-empty pre-sidecar store, per
-    * [[requireStoreLayout]]'s return) ALSO writes a
-    * `_layout_provenance` sidecar saying the tuple was adopted WITHOUT
-    * file-level verification — so the one first contact where a wrong
-    * declaration could become the permanent contract leaves a durable,
-    * auditable trace next to the contract itself, not just a log line
-    * that scrolled away. A verified adoption (fresh store) writes no
-    * provenance: absence of the file means the contract is
-    * first-writer truth. */
+    * passes, so the adopted values are a brand-new store's first-writer
+    * truth. Atomic create-then-rename; the single-writer contract makes
+    * the lost-race require a loud invariant. */
   private[streaming] def adoptStoreLayout(spark: SparkSession,
                                           codeStoreDir: String,
                                           lshBits: Int, lshTables: Int,
-                                          refineBits: Int,
-                                          unverified: Boolean = false): Unit = {
+                                          refineBits: Int): Unit = {
     val root = new org.apache.hadoop.fs.Path(codeStoreDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val meta = new org.apache.hadoop.fs.Path(root, LayoutFile)
     if (fs.exists(meta)) return
     fs.mkdirs(root)
-    if (unverified) {
-      // Same create-tmp-then-rename pattern as the _layout write below:
-      // a direct create leaves a truncated provenance file if the
-      // writer dies mid-write. Ordering: provenance lands BEFORE the
-      // layout rename — a crash between the two leaves provenance with
-      // no contract, and the next adopt simply rewrites both (the
-      // delete below clears that orphan); the reverse order would risk
-      // a contract with NO provenance, which by this file's protocol
-      // reads as verified first-writer truth.
-      val prov = new org.apache.hadoop.fs.Path(root, ProvenanceFile)
-      val provTmp = new org.apache.hadoop.fs.Path(root,
-        s".tmp-$ProvenanceFile-${System.nanoTime()}")
-      val pOut = fs.create(provTmp, true)
-      try pOut.write((
-        "adopted-unverified: declared geometry " +
-          s"(${layoutBody(lshBits, lshTables, refineBits).replace("\n", " ")}) " +
-          "was recorded as this pre-sidecar store's permanent layout " +
-          "contract with only xbuckets PRESENCE verifiable against the " +
-          "files. If the store was built under different values, probe " +
-          "and stored bucket keys agree only by chance and recall is " +
-          "silently collapsed — confirm the original run's configuration.\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally pOut.close()
-      if (fs.exists(prov)) fs.delete(prov, false) // orphan of a crashed prior adopt
-      require(fs.rename(provTmp, prov),
-        s"provenance adopt lost a race at $codeStoreDir — the store's " +
-          "single-writer contract was violated")
-    }
     val tmp = new org.apache.hadoop.fs.Path(root,
       s".tmp-$LayoutFile-${System.nanoTime()}")
     val out = fs.create(tmp, true)

@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.StructType
 import graft.sources.StoreManifest
 
 /** The store protocol of the `batch_id=` incremental stores (sig,
-  * label, span, gram, fingerprint, ANN code). Every store resolves
-  * through its newest [[StoreManifest]] version (atomic old-or-new
+  * label, span, gram, fingerprint, ANN code, corpus stats). Every store
+  * resolves through its newest [[StoreManifest]] version (atomic old-or-new
   * across compactions, each batch directory listed once); a store root
   * holding batch directories but no version fails loud
   * ([[StoreManifest.live]]). Every store needs three operations:
@@ -53,11 +53,6 @@ private[graft] object StoreCompaction {
         .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     Read(rows, kept.map(idOf))
   }
-
-  /** The live batch directories' paths — for a caller that inspects the
-    * stored files themselves (the ANN layout check). */
-  def liveDirs(spark: SparkSession, storeDir: String): Seq[String] =
-    StoreManifest.live(spark, storeDir).map(n => s"$storeDir/$n")
 
   /** Write `rows` as batch `batchId` (overwrite), then publish it. */
   def commit(rows: DataFrame, storeDir: String, batchId: Long): Unit = {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -34,7 +35,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - nodes: the final plan as a tree with each node's runtime metrics
   *    (rows, data size, shuffle bytes/records, spill), for the main
   *    execution and every side that shuffled over 1 MB, with per-execution
-  *    shuffle and wall — two scales diff exchange-by-exchange.
+  *    shuffle and wall — two scales diff exchange-by-exchange. An
+  *    in-memory scan of a persisted stage shows the plan that built it.
   *  - plans-md: regenerates PLANS.md.
   */
 object Inspect {
@@ -180,22 +182,29 @@ object Inspect {
   private def shuffleWritten(p: SparkPlan): Long =
     walk(p).map(_._1.metrics.get("shuffleBytesWritten").map(_.value).getOrElse(0L)).sum
 
-  private def tree(p: SparkPlan): Seq[String] = walk(p).flatMap { case (n, depth) =>
-    val ms = n.metrics.collect {
-      case (k, m) if NodeKeys.contains(k) && m.value > 0 =>
-        s"$k=${if (BytesKeys.contains(k)) fmt(m.value) else m.value.toString}"
-    }.toSeq.sorted.mkString(" ")
-    val label = n match {
-      case a: AdaptiveSparkPlanExec => a.simpleString(0) // carries isFinalPlan
-      case _ => n.nodeName
+  /** [[walk]]'s nodes with their metrics, one line each. Unlike [[walk]],
+    * an in-memory scan descends into the plan that built its cache (a
+    * `Stages.persisted` stage), under a `(cached stage)` line. */
+  private def tree(p: SparkPlan, from: Int = 0): Seq[String] =
+    walk(p, from).flatMap { case (n, depth) =>
+      val ms = n.metrics.collect {
+        case (k, m) if NodeKeys.contains(k) && m.value > 0 =>
+          s"$k=${if (BytesKeys.contains(k)) fmt(m.value) else m.value.toString}"
+      }.toSeq.sorted.mkString(" ")
+      val label = n match {
+        case a: AdaptiveSparkPlanExec => a.simpleString(0) // carries isFinalPlan
+        case _ => n.nodeName
+      }
+      val line = ("  " * depth) + label + (if (ms.nonEmpty) s"  [$ms]" else "")
+      n match {
+        case re: ReusedExchangeExec =>
+          Seq(line, ("  " * (depth + 1)) + s"(reused exchange #${re.child.id})")
+        case m: InMemoryTableScanExec =>
+          Seq(line, ("  " * (depth + 1)) + "(cached stage)") ++
+            tree(m.relation.cachedPlan, depth + 2)
+        case _ => Seq(line)
+      }
     }
-    val line = ("  " * depth) + label + (if (ms.nonEmpty) s"  [$ms]" else "")
-    n match {
-      case re: ReusedExchangeExec =>
-        Seq(line, ("  " * (depth + 1)) + s"(reused exchange #${re.child.id})")
-      case _ => Seq(line)
-    }
-  }
 
   /** Per-operator shuffle attribution for one query: which exchange grew
     * when a total moved. Sides that shuffled under 1 MB (codebook-sample

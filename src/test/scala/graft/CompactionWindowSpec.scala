@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import graft.streaming.{IncrementalDedup, IncrementalSpanDedup, IncrementalSubstringScrub, IncrementalWinnowing, StoreCompaction}
+import graft.streaming.{IncrementalCorpusStats, IncrementalDedup, IncrementalSpanDedup, IncrementalSubstringScrub, IncrementalWinnowing, StoreCompaction}
 
 /** Store compaction under the manifest layout
   * ([[graft.sources.StoreManifest]]) is snapshot-write → atomic
@@ -175,6 +175,42 @@ class CompactionWindowSpec extends SparkSpec {
       IncrementalWinnowing.compactStore(spark, store, uptoBatch = 1)
     }
     assert(e.getMessage.contains("newest"))
+  }
+
+  test("corpus stats store: readers mid-compaction resolve the same stats") {
+    // tf and df are sums, so a read that saw both the snapshot and its
+    // folded batch would count batch 0's tokens twice
+    val root = Files.createTempDirectory("graft-statswindow")
+    val in = root.resolve("in"); Files.createDirectories(in)
+    val store = root.resolve("stats").toString
+    val ckpt = root.resolve("ckpt").toString
+    def ingest(rows: (Long, String)*): Unit = {
+      rows.toSeq.toDF("doc_id", "text")
+        .coalesce(1).write.mode("append").parquet(in.toString)
+      val schema = spark.read.parquet(in.toString).select("doc_id", "text").schema
+      IncrementalCorpusStats.runOnce(spark, schema, in.toString,
+        "doc_id", "text", store, ckpt)
+    }
+    ingest(1L -> "a b a", 2L -> "b c")
+    ingest(3L -> "a d")
+
+    def stats(dir: String, uptoBatch: Option[Long] = None): Set[(String, Long, Long)] =
+      IncrementalCorpusStats.resolveStats(spark, dir, uptoBatch)
+        .as[(String, Long, Long)].collect().toSet
+    def heavy(dir: String): Set[(String, Long)] =
+      IncrementalCorpusStats.heavyHittersFromStore(spark, dir, 4)
+        .as[(String, Long)].collect().toSet
+    val want = stats(store)
+    val wantAsOf0 = stats(store, Some(0L))
+    val wantHeavy = heavy(store)
+    assert(want == Set(("a", 3L, 2L), ("b", 2L, 2L), ("c", 1L, 1L), ("d", 1L, 1L)))
+    val (post, mid1, mid2) = windowStates(root, store,
+      d => IncrementalCorpusStats.compactStore(spark, d, uptoBatch = 0))
+    for ((state, dir) <- Seq("post" -> post, "mid1" -> mid1, "mid2" -> mid2)) {
+      assert(stats(dir) == want, s"$state stats diverged")
+      assert(stats(dir, Some(0L)) == wantAsOf0, s"$state as-of-0 stats diverged")
+      assert(heavy(dir) == wantHeavy, s"$state heavy hitters diverged")
+    }
   }
 
   test("signature store: verification emits each pair once mid-window") {

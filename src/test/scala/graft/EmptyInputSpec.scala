@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import graft.operators._
+import graft.streaming.IncrementalCorpusStats
 
 /** Empty-input totality: every library operator must map empty input to
   * empty output (or raise a DOCUMENTED argument error) — never an
@@ -111,6 +113,16 @@ class EmptyInputSpec extends SparkSpec {
         "doc_id", "text", model0, "tok", "w", 3L)
       .select($"n_hits", $"score").as[(Int, Long)].collect().toSeq
     assert(scored == Seq((0, 3L)))
+    // a never-written incremental stats store resolves to typed empty stats
+    val never = java.nio.file.Files.createTempDirectory("graft-nostats")
+      .resolve("store").toString
+    for (upto <- Seq(None, Some(0L))) {
+      val stats = IncrementalCorpusStats.resolveStats(spark, never, upto)
+      assert(stats.schema.map(f => f.name -> f.dataType) == Seq(
+        "token" -> StringType, "tf" -> LongType, "df" -> LongType))
+      assert(stats.count() == 0)
+    }
+    assert(IncrementalCorpusStats.heavyHittersFromStore(spark, never, 200).count() == 0)
   }
 
   test("curation: empty corpus → empty splits/samples/outliers") {

@@ -49,6 +49,25 @@ class InspectSpec extends SparkSpec with BeforeAndAfterAll {
     assert(lsh.sides.forall(_._1.executedPlan.toString.contains("isFinalPlan=true")))
   }
 
+  test("nodes shows a persisted stage's build plan under its in-memory scan") {
+    val q = "d2_minhash_signature" // reads the persisted doc_sigs stage
+    val lines = Inspect.nodes(runner, q)
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    val scan = lines.indexWhere(_.trim.startsWith("InMemoryTableScan"))
+    assert(scan >= 0, lines.mkString("\n"))
+    assert(lines(scan + 1).trim == "(cached stage)" &&
+      indent(lines(scan + 1)) == indent(lines(scan)) + 2, lines.mkString("\n"))
+    val built = lines.drop(scan + 2).takeWhile(indent(_) >= indent(lines(scan)) + 4)
+    assert(built.exists(_.contains("numOutputRows=")), lines.mkString("\n"))
+    // walk (census, shuffle totals, PLANS.md) keeps the scan as a leaf
+    val walked = Inspect.walk(runner.run(q).plan).map(_._1)
+    val scans = walked.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => m
+    }
+    assert(scans.nonEmpty)
+    assert(scans.forall(m => !walked.exists(_ eq m.relation.cachedPlan)))
+  }
+
   test("query selection: a typo in the only-list fails loudly") {
     val e = intercept[IllegalArgumentException](
       SparkEntry.selected(Some(s"$Plain, a2_pricing_sumary")))

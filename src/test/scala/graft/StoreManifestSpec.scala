@@ -70,6 +70,8 @@ class StoreManifestSpec extends SparkSpec {
       graft.streaming.StoreCompaction.fold(spark, folded, uptoBatch = 0)(_.drop("batch_id")))
     assert(!Files.exists(java.nio.file.Paths.get(folded, "batch_id=-1")),
       "no snapshot was written")
+    val stats = pile()
+    refusesPile(stats)(graft.streaming.IncrementalCorpusStats.resolveStats(spark, stats))
 
     // an unlisted dir at or above the reading batch is that batch's own
     // failed first attempt (see StreamingSpec's first-batch crash test):

@@ -353,9 +353,10 @@ class StreamingSpec extends SparkSpec {
     // StoreCompaction.commit and reads it through StoreCompaction.read,
     // so a batch directory the manifest does not list (a crashed
     // writer's leftover, a compactor's unpublished snapshot) never
-    // reaches a micro-batch. Pipeline A gets a planted, unlisted
-    // batch_id=7 in every store, built to change the next batch's
-    // output if it were read; pipeline B is the clean twin.
+    // reaches a micro-batch or a stats read. Pipeline A gets a planted,
+    // unlisted batch_id=7 in every store, built to change the next
+    // batch's output (or the resolved stats) if it were read; pipeline
+    // B is the clean twin.
     import graft.streaming.{IncrementalSpanDedup, IncrementalSubstringScrub, IncrementalWinnowing}
     val root = Files.createTempDirectory("graft-protocol")
     val base = (1 to 20).map(i => s"w$i").mkString(" ")
@@ -367,7 +368,7 @@ class StreamingSpec extends SparkSpec {
     val v2 = Array(0.98f, 0.02f, 1f, 0f, 1f, 0f, 1f, 0f)
     val v3 = Array(0f, 1f, 0f, 1f, 0f, 1f, 0f, 1f)
     val v4 = Array(0.99f, 0.01f, 1f, 0f, 1f, 0f, 1f, 0f)
-    val stores = Seq("sigs", "labels", "spans", "grams", "fps", "codes")
+    val stores = Seq("sigs", "labels", "spans", "grams", "fps", "codes", "stats")
     val outs = Seq("pairs", "spans", "grams", "fps", "ann")
     def path(tag: String, name: String) = root.resolve(s"$tag/$name").toString
     def ingest(tag: String, docs: Seq[(Long, String)],
@@ -387,6 +388,8 @@ class StreamingSpec extends SparkSpec {
       IncrementalAnn.runOnce(spark, spark.read.parquet(p("vin")).schema, p("vin"),
         "vec_id", "embedding", p("codes"), p("out-ann"), p("ck-ann"),
         dim = 8, m = 4, codewords = 16)
+      IncrementalCorpusStats.runOnce(spark, schema, p("in"), "doc_id", "text",
+        p("stats"), p("ck-stats"))
     }
     def listed(tag: String, store: String): Seq[String] =
       graft.sources.StoreManifest.resolve(spark, path(tag, store))
@@ -400,8 +403,10 @@ class StreamingSpec extends SparkSpec {
 
     // the plants: id-keyed stores get batch 0's rows under new ids (a
     // read would pair the next batch with them), the label store
-    // relabels batch 0's cluster, and the membership stores hold the
-    // next batch's own spans and grams (a read would scrub it bare)
+    // relabels batch 0's cluster, the membership stores hold the next
+    // batch's own spans and grams (a read would scrub it bare), and the
+    // stats store holds batch 0's partial again (a read would count it
+    // twice)
     def plant(store: String, rows: org.apache.spark.sql.DataFrame): Unit =
       rows.coalesce(1).write.parquet(path("A", s"$store/batch_id=7"))
     def batch0(store: String) = spark.read.parquet(path("A", s"$store/batch_id=0"))
@@ -409,6 +414,7 @@ class StreamingSpec extends SparkSpec {
     plant("fps", batch0("fps").withColumn("doc_id", $"doc_id" + 100))
     plant("codes", batch0("codes").withColumn("id", $"id" + 100))
     plant("labels", batch0("labels").withColumn("cluster", lit(-5L)))
+    plant("stats", batch0("stats"))
     val next = docs1.toDF("doc_id", "text")
     plant("spans", graft.operators.Dedup.spanStore(next, "doc_id", "text", 3))
     plant("grams", graft.operators.Dedup.substringGramStore(next, "text", 2))
@@ -427,6 +433,13 @@ class StreamingSpec extends SparkSpec {
         s"an unlisted store directory changed the $store delta")
       assert(listed("A", store) == Seq("batch_id=0", "batch_id=1"))
     }
+    def stats(tag: String) = (
+      IncrementalCorpusStats.resolveStats(spark, path(tag, "stats"))
+        .collect().map(_.toString).toSet,
+      IncrementalCorpusStats.heavyHittersFromStore(spark, path(tag, "stats"), 30)
+        .collect().map(_.toString).toSet)
+    assert(stats("B")._2.nonEmpty, "test precondition: the w-tokens are heavy")
+    assert(stats("A") == stats("B"), "an unlisted store directory changed the stats")
   }
 
   test("streaming ANN: PQ code store accumulates, near-dups found across batches") {
@@ -629,58 +642,41 @@ class StreamingSpec extends SparkSpec {
       root.resolve("fresh").toString, refineBits = 8)
   }
 
-  test("pre-sidecar ANN store adoption records unverified provenance; fresh adoption records none") {
-    // The one first contact where a wrong declared geometry could be
-    // silently recorded as a store's permanent contract is a non-empty
-    // store from before the _layout sidecar existed: only xbuckets
-    // PRESENCE is checkable against the files. Adoption there must
-    // leave a durable trace next to the contract — not just a log
-    // line — and the presence check itself must still reject loudly.
-    val root = Files.createTempDirectory("graft-presidecar")
+  test("a non-empty ANN store without _layout is refused and nothing is written") {
+    // A store that lists batches but lost its _layout sidecar (or was
+    // published by hand) carries nothing that pins the geometry it was
+    // built with: adopting this run's declared tuple would be the
+    // silent recall collapse the sidecar exists to prevent. The run
+    // must refuse before it touches the store, the outputs or the
+    // checkpoint.
+    val root = Files.createTempDirectory("graft-nolayout")
     val in = root.resolve("in"); Files.createDirectories(in)
     val codes = root.resolve("codes"); val codesS = codes.toString
     Seq((1L, Seq(1f, 0f, 1f, 0f)), (2L, Seq(0f, 1f, 0f, 1f)))
       .toDF("vec_id", "embedding")
       .coalesce(1).write.mode("append").parquet(in.toString)
     val schema = spark.read.parquet(in.toString).schema
-    def run(refine: Int, ck: String): Unit =
+    def run(ck: String): Unit =
       IncrementalAnn.runOnce(spark, schema, in.toString, "vec_id", "embedding",
         codesS, root.resolve(s"pairs-$ck").toString, root.resolve(ck).toString,
-        dim = 4, m = 2, codewords = 4,
-        maxBucket = if (refine > 0) 2 else Int.MaxValue, refineBits = refine)
-    run(2, "ck1")
+        dim = 4, m = 2, codewords = 4, maxBucket = 2, refineBits = 2)
+    run("ck1")
     val layout = codes.resolve("_layout")
-    val prov = codes.resolve("_layout_provenance")
     assert(Files.exists(layout), "first arm must record the contract")
-    assert(!Files.exists(prov),
-      "a fresh store's adoption is first-writer truth — provenance " +
-        "would wrongly mark it unverified")
-    // simulate a store written before the sidecar existed
+    val listed = graft.sources.StoreManifest.resolve(spark, codesS)
+    assert(listed.map(_.dirs) == Some(Seq("batch_id=0")))
+
     Files.delete(layout)
-    // happy path: the same geometry re-adopts — loudly unverified
-    run(2, "ck2")
-    assert(Files.exists(layout), "re-adoption must restore the contract")
-    assert(Files.exists(prov),
-      "pre-sidecar adoption must leave a durable provenance trace")
-    val provText = new String(Files.readAllBytes(prov),
-      java.nio.charset.StandardCharsets.UTF_8)
-    assert(provText.contains("adopted-unverified") &&
-      provText.contains("refineBits=2"),
-      s"provenance must name the unverified tuple, got: $provText")
-    // and the adopted tuple is now the enforced contract again
-    val eAfter = intercept[IllegalArgumentException] {
-      IncrementalAnn.requireStoreLayout(spark, codesS, refineBits = 4)
-    }
-    assert(eAfter.getMessage.contains("layout contract"))
-    // the one thing the files CAN say still rejects: declaring
-    // refineBits=0 against a store whose rows carry xbuckets
-    Files.delete(layout); Files.delete(prov)
-    val ePresence = intercept[IllegalArgumentException] {
-      run(0, "ck3")
-    }
-    assert(ePresence.getMessage.contains("layout contract"))
-    assert(!Files.exists(layout),
-      "a rejected adoption must not record a contract")
+    val e = intercept[IllegalStateException](run("ck2"))
+    assert(e.getMessage.contains(codesS) && e.getMessage.contains("_layout"),
+      e.getMessage)
+    assert(!Files.exists(layout), "a refused store must not get a contract")
+    assert(new java.io.File(codesS).list().filterNot(_.startsWith(".")).toSet ==
+      Set("_codebook", "_manifest", "batch_id=0"))
+    assert(graft.sources.StoreManifest.resolve(spark, codesS) == listed,
+      "nothing was committed")
+    assert(!Files.exists(root.resolve("ck2")) &&
+      !Files.exists(root.resolve("pairs-ck2")), "no stream was started")
   }
 
   test("streaming ANN drift policy: stable ingest keeps one codebook, drifted batch retrains; cross-generation pairs verify") {
@@ -892,18 +888,23 @@ class StreamingSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-incstats")
     val in = root.resolve("in"); Files.createDirectories(in)
     val store = root.resolve("store").toString
-    val ckpt = root.resolve("ckpt").toString
+    val ckpt = root.resolve("ckpt")
     val b0 = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"))
     val b1 = Seq((3L, "alpha delta"), (4L, "beta beta alpha"))
+    val b2 = Seq((5L, "gamma gamma epsilon"))
+    def schema = spark.read.parquet(in.toString).select("doc_id", "text").schema
+    def run(ck: java.nio.file.Path): Unit =
+      IncrementalCorpusStats.runOnce(spark, schema, in.toString,
+        "doc_id", "text", store, ck.toString)
     def ingest(rows: Seq[(Long, String)]): Unit = {
       rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in.toString)
-      val schema = spark.read.parquet(in.toString).select("doc_id", "text").schema
-      IncrementalCorpusStats.runOnce(spark, schema, in.toString,
-        "doc_id", "text", store, ckpt)
+      run(ckpt)
     }
-    def resolved: Set[(String, Long, Long)] =
-      IncrementalCorpusStats.resolveStats(spark, store)
+    def resolved(uptoBatch: Option[Long] = None): Set[(String, Long, Long)] =
+      IncrementalCorpusStats.resolveStats(spark, store, uptoBatch)
         .as[(String, Long, Long)].collect().toSet
+    def listed: Set[String] =
+      graft.sources.StoreManifest.resolve(spark, store).get.dirs.toSet
     def recompute(rows: Seq[(Long, String)]): Set[(String, Long, Long)] = {
       val toks = rows.toDF("doc_id", "text")
         .select($"doc_id", explode(split($"text", " ")).as("token"))
@@ -912,17 +913,15 @@ class StreamingSpec extends SparkSpec {
         .as[(String, Long, Long)].collect().toSet
     }
     ingest(b0)
-    assert(resolved == recompute(b0))
+    assert(resolved() == recompute(b0))
     ingest(b1)
-    assert(resolved == recompute(b0 ++ b1))
+    assert(resolved() == recompute(b0 ++ b1))
     // snapshot read: the as-of-batch-0 statistics stay reproducible
     // after later ingests (append-only immutable partials)
-    assert(IncrementalCorpusStats.resolveStats(spark, store, uptoBatch = Some(0L))
+    assert(resolved(Some(0L)) == recompute(b0))
+    // the store is append-only partials: batch 0's directory unchanged
+    assert(spark.read.parquet(s"$store/batch_id=0")
       .as[(String, Long, Long)].collect().toSet == recompute(b0))
-    // the store is append-only partials: batch 0's partition unchanged
-    assert(spark.read.parquet(store).filter($"batch_id" === 0)
-      .as[(String, Long, Long, Long)].collect().map(t => (t._1, t._2, t._3)).toSet
-      == recompute(b0))
     // continuous heavy hitters agree with the batch operator's cutoff
     val hh = IncrementalCorpusStats.heavyHittersFromStore(spark, store, 4)
       .as[(String, Long)].collect().toSet
@@ -932,56 +931,55 @@ class StreamingSpec extends SparkSpec {
     assert(hh == want)
     // folding through the NEWEST batch is refused: foreachBatch is
     // at-least-once, so an uncommitted newest batch could replay on
-    // top of a base that already folded it and double-count
-    val compacted = root.resolve("compacted").toString
+    // top of a snapshot that already folded it and double-count
     val eNew = intercept[IllegalArgumentException] {
-      IncrementalCorpusStats.compactTo(spark, store, compacted, uptoBatch = 1L)
+      IncrementalCorpusStats.compactStore(spark, store, uptoBatch = 1L)
     }
-    assert(eNew.getMessage.contains("strictly newer"))
-    val b2 = Seq((5L, "gamma gamma epsilon"))
+    assert(eNew.getMessage.contains("newest"))
+    assert(listed == Set("batch_id=0", "batch_id=1"))
     ingest(b2)
-    // compaction folds partials <= uptoBatch into one base and carries
-    // the still-replayable newer partitions over unfolded
-    IncrementalCorpusStats.compactTo(spark, store, compacted, uptoBatch = 1L)
-    assert(IncrementalCorpusStats.resolveStats(spark, compacted)
-      .as[(String, Long, Long)].collect().toSet == recompute(b0 ++ b1 ++ b2))
-    // the base lands in the reserved batch_id=-1 partition a restarted
-    // stream (fresh checkpoint, ids from 0) can never overwrite; batch 2
-    // survives as its own replay-overwritable partition
-    assert(spark.read.parquet(compacted).select($"batch_id").distinct()
-      .as[Long].collect().toSet == Set(-1L, 2L))
-    // a replay of the carried-over batch overwrites its own partition
-    // in the compacted store without double-counting
-    spark.read.parquet(s"$store/batch_id=2")
-      .write.mode("overwrite").parquet(s"$compacted/batch_id=2")
-    assert(IncrementalCorpusStats.resolveStats(spark, compacted)
-      .as[(String, Long, Long)].collect().toSet == recompute(b0 ++ b1 ++ b2))
-    // in-place compaction would double-count surviving partials
-    val e = intercept[IllegalArgumentException] {
-      IncrementalCorpusStats.compactTo(spark, store, store, uptoBatch = 1L)
-    }
-    assert(e.getMessage.contains("fresh directory"))
+    val all = recompute(b0 ++ b1 ++ b2)
+    // the fold replaces batches <= 1 in place by one snapshot under a
+    // negative id (no stream batch can replay onto it); batch 2
+    // survives as its own replay-overwritable directory
+    IncrementalCorpusStats.compactStore(spark, store, uptoBatch = 1L)
+    assert(resolved() == all)
+    assert(listed == Set("batch_id=-2", "batch_id=2"))
+    assert(!Files.exists(root.resolve("store/batch_id=0")) &&
+      !Files.exists(root.resolve("store/batch_id=1")), "folded batches are deleted")
+    // a replay of the surviving batch overwrites its own directory
+    // without double-counting
+    run(cloneCkptWithoutCommit(ckpt, batch = 2))
+    assert(resolved() == all)
+    assert(listed == Set("batch_id=-2", "batch_id=2"))
     // snapshots BELOW the folded horizon are unanswerable and must fail
-    // loudly (the base partition would otherwise satisfy batch_id <= 0
-    // and silently return the folded totals as "batch 0")
-    val e2 = intercept[IllegalArgumentException] {
-      IncrementalCorpusStats.resolveStats(spark, compacted, uptoBatch = Some(0L))
-        .collect()
+    // loudly (the snapshot would otherwise satisfy batch_id <= 0 and
+    // silently return the folded totals as "batch 0")
+    def refusedBelowHorizon(): Unit = {
+      val e = intercept[IllegalArgumentException](resolved(Some(0L)))
+      assert(e.getMessage.contains("compaction horizon"))
     }
-    assert(e2.getMessage.contains("compaction horizon"))
-    // at/above the horizon the compacted store still answers, and the
-    // as-of read excludes the unfolded newer partition
-    assert(IncrementalCorpusStats.resolveStats(spark, compacted, uptoBatch = Some(1L))
-      .as[(String, Long, Long)].collect().toSet == recompute(b0 ++ b1))
+    refusedBelowHorizon()
+    // at the horizon the store still answers, and the as-of read
+    // excludes the unfolded newer batch
+    assert(resolved(Some(1L)) == recompute(b0 ++ b1))
+    // a second fold at the same horizon folds the snapshot into a
+    // fresh one: stats and horizon unchanged
+    IncrementalCorpusStats.compactStore(spark, store, uptoBatch = 1L)
+    assert(listed == Set("batch_id=-3", "batch_id=2"))
+    assert(resolved() == all)
+    assert(resolved(Some(1L)) == recompute(b0 ++ b1))
+    refusedBelowHorizon()
   }
 
-  /** Clone `ckpt` to a sibling dir with batch 0's commit marker (and
+  /** Clone `ckpt` to a sibling dir with `batch`'s commit marker (and
     * the Hadoop `.crc` sidecars / atomic-write temps) dropped — the
     * checkpoint exactly as a driver that crashed between the sink
     * write and the commit leaves it, at a fresh path because Spark's
     * same-path concurrent-checkpoint guard keys on the literal
     * directory within one JVM. */
-  private def cloneCkptWithoutCommit(ckpt: java.nio.file.Path): java.nio.file.Path = {
+  private def cloneCkptWithoutCommit(ckpt: java.nio.file.Path,
+                                     batch: Long = 0): java.nio.file.Path = {
     val ckpt2 = ckpt.resolveSibling(ckpt.getFileName.toString + "-replay")
     Files.walk(ckpt).forEach { src =>
       val dst = ckpt2.resolve(ckpt.relativize(src))
@@ -989,7 +987,7 @@ class StreamingSpec extends SparkSpec {
       else if (!src.getFileName.toString.startsWith("."))
         Files.copy(src, dst)
     }
-    assert(Files.deleteIfExists(ckpt2.resolve("commits/0")))
+    assert(Files.deleteIfExists(ckpt2.resolve(s"commits/$batch")))
     ckpt2
   }
 
